@@ -8,7 +8,9 @@ ONE JSON line:
 Each query is executed to completion after a warm-up of the Spark
 session; the per-query number is the MEDIAN of three measured runs
 (two warm-up executions first), with the max−min spread reported in
-the companion "spread" map so sub-noise deltas are identifiable.
+the companion "spread" map so sub-noise deltas are identifiable. The
+execution driver and the warm-up/measure loop are
+``pyspark_recs.measure``'s, shared with every tool under tools/.
 """
 
 from __future__ import annotations
@@ -16,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -236,6 +237,78 @@ def _load_json(path):
     return None
 
 
+def compare_to_prev(prev, now):
+    """Round-over-round delta table of run ``now`` against the previous
+    result ``prev`` (both in the long-line shape: queries, spread, cpus,
+    composite, sf). Returns ``(vs_prev, vs_prev_skipped)``.
+
+    A comparison across protocols is refused: ``vs_prev`` then holds
+    only the protocol pair and ``vs_prev_skipped`` says why. Comparing
+    an 8-core run against a 32-core baseline measures lost parallelism,
+    not plan regressions (VERDICT r12 #3); a single-pass median against
+    a composite per-query minimum flags phantom regressions (VERDICT r13
+    #1); cross-SF deltas are meaningless.
+
+    Gated on the committed spread columns (VERDICT r10 #6): a per-query
+    delta counts as a REGRESSION only when it clears BOTH rounds'
+    spreads plus the 0.2 s noise floor AND is >1.5x — the decision rule
+    SCALING.md documents, applied mechanically instead of by hand."""
+    if not prev:
+        return None, None
+    protocol = {
+        side: {"cpus": run.get("cpus"), "composite": run.get("composite")}
+        for side, run in (("prev", prev), ("now", now))
+    }
+    for key in ("cpus", "composite", "sf"):
+        if prev.get(key) is not None and prev[key] != now[key]:
+            return {"protocol": protocol}, (
+                f"prev run at {key}={prev[key]}, now {key}={now[key]}"
+            )
+    if not isinstance(prev.get("queries"), dict):
+        return None, None
+    pq = prev["queries"]
+    ps = prev.get("spread", {})
+    timings = now["queries"]
+    spread = now["spread"]
+    common = [n for n in timings if n in pq]
+    # Session-drift normalizer (VERDICT r11 #4): per-query spread
+    # gates can't see WHOLE-SESSION drift — this VM's co-tenant
+    # CPU steal moved two identical-code r11 sessions by
+    # +18%/+33%, which made the raw vs_prev flag 8 phantom
+    # regressions (7 with zero code change; the distribution
+    # check showed a uniform 1.25x median across all 165 common
+    # queries). The median common-query ratio IS that session
+    # factor — robust to a few genuinely regressed queries as
+    # long as they're a minority — so gates compare against
+    # drift-scaled expectations and only a query that moved
+    # RELATIVE to its own session flags. Needs >=10 common
+    # queries for the median to mean anything; below that the
+    # normalizer stays off (drift = 1.0).
+    ratios = sorted(timings[n] / pq[n] for n in common if pq[n] > 0)
+    drift = ratios[len(ratios) // 2] if len(ratios) >= 10 else 1.0
+    regressions = {}
+    for n in common:
+        expected = pq[n] * drift
+        delta = timings[n] - expected
+        gate = (ps.get(n, 0.0) + spread.get(n, 0.0)) * drift + 0.2
+        if delta > gate and timings[n] > 1.5 * expected:
+            regressions[n] = {
+                "prev": pq[n],
+                "drift_expected": round(expected, 3),
+                "now": timings[n],
+                "delta_vs_expected": round(delta, 3),
+                "noise_gate": round(gate, 3),
+            }
+    return {
+        "protocol": protocol,
+        "n_common": len(common),
+        "session_drift": round(drift, 3),
+        "prev_total_common": round(sum(pq[n] for n in common), 3),
+        "now_total_common": round(sum(timings[n] for n in common), 3),
+        "regressions": regressions,
+    }, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # --composite N (VERDICT r12 #7): repeat the whole measured loop N
@@ -248,17 +321,15 @@ def main() -> None:
     argv = sys.argv[1:]
     if "--composite" in argv:
         composite = max(1, int(argv[argv.index("--composite") + 1]))
+    from pyspark_recs.measure import measure, run_query
     from pyspark_recs.session import get_spark
     from pyspark_recs.workloads import QUERIES
 
     # The previous round's committed result (bench_result.json is
     # overwritten below, so read it FIRST): the mechanical
     # round-over-round comparison the spread column exists for.
-    # vs_prev is only meaningful at MATCHED core counts (VERDICT r12
-    # #3: the driver's 8-core run diffed against a 32-core baseline
-    # and "reproduced" a phantom regression that was lost parallelism,
-    # not a plan change), so prefer the per-core-count history file
-    # and refuse cross-core comparisons below.
+    # Prefer the per-core-count history file: compare_to_prev refuses
+    # cross-core comparisons.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     prev = _load_json(os.path.join(repo_dir, f"bench_result_c{cpus}.json"))
@@ -279,22 +350,11 @@ def main() -> None:
     # first pays Catalyst planning + Janino whole-stage-codegen
     # compilation, the second lets the JVM JIT promote the generated
     # code — deep plans measurably drop another 2-4x between run 1 and
-    # run 3), then the measured run. Matches warehouse-style
+    # run 3), then the measured runs. Matches warehouse-style
     # benchmarking; cold-start compile cost is a per-plan constant, not
     # a data-scaling term.
-    #
-    # Execution driver: a bit_xor(xxhash64(all columns)) checksum, NOT
-    # count() — count() lets Catalyst prune projections and even whole
-    # Window operators (verified via explain), which under-measures
-    # expression-heavy queries. The checksum forces every output column
-    # to be computed while returning one row (no collect cost).
-    from pyspark.sql import functions as F
-
-    def run_query(fn):
-        df = fn(spark, sf_dir)
-        df.select(
-            F.expr("bit_xor(xxhash64(struct(*)))").alias("checksum")
-        ).collect()
+    def bench_query(fn):
+        return measure(lambda: run_query(spark, fn, sf_dir), 2, 3)
 
     # Cold vs steady split (round-5 lesson): the first execution of a
     # family's lead query also pays its session-shared subplan
@@ -316,137 +376,54 @@ def main() -> None:
         for name in HEADLINE:
             if name not in QUERIES:
                 continue  # forward slot for a query landing later this round
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
-            run_query(fn)  # warm-up 1: plan + codegen + shared materialization
+            first, runs = bench_query(QUERIES[name])
             if rep == 0:
-                cold[name] = round(time.perf_counter() - t0, 3)
-            run_query(fn)  # warm-up 2: JIT promotion
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                run_query(fn)
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
+                cold[name] = round(first, 3)
             med = round(runs[1], 3)
             if name not in timings or med < timings[name]:
                 timings[name] = med
                 spread[name] = round(runs[2] - runs[0], 3)
 
-    # Round-over-round delta table, gated on the committed spread
-    # columns (VERDICT r10 #6): a per-query delta counts as a
-    # REGRESSION only when it clears BOTH rounds' spreads plus the
-    # 0.2 s noise floor AND is >1.5x — the decision rule SCALING.md
-    # documents, now applied mechanically instead of by judge/builder
-    # hand-comparison of different sessions.
     sf_name = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
-        sf_now = float(sf_name)
+        sf_val = float(sf_name)
     except ValueError:
-        sf_now = sf_name
-    vs_prev = None
-    vs_prev_skipped = None
-    if (
-        prev
-        and prev.get("cpus") is not None
-        and prev.get("cpus") != cpus
-    ):
-        # VERDICT r12 #3: comparing an 8-core run against a 32-core
-        # baseline measures lost parallelism, not plan regressions.
-        vs_prev_skipped = (
-            f"prev run at cpus={prev.get('cpus')}, now cpus={cpus}"
-        )
-        prev = None
-    if (
-        prev
-        and isinstance(prev.get("queries"), dict)
-        and prev.get("sf") == sf_now  # cross-SF deltas are meaningless
-    ):
-        pq = prev["queries"]
-        ps = prev.get("spread", {})
-        common = [n for n in timings if n in pq]
-        # Session-drift normalizer (VERDICT r11 #4): per-query spread
-        # gates can't see WHOLE-SESSION drift — this VM's co-tenant
-        # CPU steal moved two identical-code r11 sessions by
-        # +18%/+33%, which made the raw vs_prev flag 8 phantom
-        # regressions (7 with zero code change; the distribution
-        # check showed a uniform 1.25x median across all 165 common
-        # queries). The median common-query ratio IS that session
-        # factor — robust to a few genuinely regressed queries as
-        # long as they're a minority — so gates compare against
-        # drift-scaled expectations and only a query that moved
-        # RELATIVE to its own session flags. Needs >=10 common
-        # queries for the median to mean anything; below that the
-        # normalizer stays off (drift = 1.0).
-        ratios = sorted(
-            timings[n] / pq[n] for n in common if pq[n] > 0
-        )
-        drift = (
-            ratios[len(ratios) // 2] if len(ratios) >= 10 else 1.0
-        )
-        regressions = {}
-        for n in common:
-            expected = pq[n] * drift
-            delta = timings[n] - expected
-            gate = (ps.get(n, 0.0) + spread.get(n, 0.0)) * drift + 0.2
-            if delta > gate and timings[n] > 1.5 * expected:
-                regressions[n] = {
-                    "prev": pq[n],
-                    "drift_expected": round(expected, 3),
-                    "now": timings[n],
-                    "delta_vs_expected": round(delta, 3),
-                    "noise_gate": round(gate, 3),
-                }
-        # Isolated re-probe (the SCALING.md protocol, mechanized —
-        # round 12): every flagged row re-runs SOLO right here, after
-        # the main loop, with no co-scheduled neighbors — and the flag
-        # records whether the regression REPRODUCES in isolation.
-        # Run-order/co-scheduling noise (HEADLINE insertions shift
-        # which query pays a neighbor's shared materialization) dies
-        # here instead of consuming judge/builder attention; only
-        # `reproduced: true` rows deserve a plan investigation.
-        for n, reg in regressions.items():
-            fn = QUERIES[n]
-            run_query(fn)
-            run_query(fn)
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                run_query(fn)
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            iso = runs[1]
-            reg["isolated"] = round(iso, 3)
-            reg["reproduced"] = bool(
-                iso - reg["drift_expected"] > reg["noise_gate"]
-                and iso > 1.5 * reg["drift_expected"]
-            )
-        vs_prev = {
-            "n_common": len(common),
-            "session_drift": round(drift, 3),
-            "prev_total_common": round(sum(pq[n] for n in common), 3),
-            "now_total_common": round(
-                sum(timings[n] for n in common), 3
-            ),
-            "regressions": regressions,
-        }
-
-    sf_val = sf_now
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total_sec",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "spread": spread,
-            "cold": cold,
-            "vs_prev": vs_prev,
-            "vs_prev_skipped": vs_prev_skipped,
-            "cpus": cpus,
-            "composite": composite,
-            "sf": sf_val,
-        }
+        sf_val = sf_name
+    result = {
+        "metric": "headline_queries_total_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "spread": spread,
+        "cold": cold,
+        "vs_prev": None,
+        "vs_prev_skipped": None,
+        "cpus": cpus,
+        "composite": composite,
+        "sf": sf_val,
+    }
+    result["vs_prev"], result["vs_prev_skipped"] = compare_to_prev(
+        prev, result
     )
+    vs_prev = result["vs_prev"]
+    regressions = (vs_prev or {}).get("regressions")
+    # Isolated re-probe (the SCALING.md protocol, mechanized —
+    # round 12): every flagged row re-runs SOLO right here, after
+    # the main loop, with no co-scheduled neighbors — and the flag
+    # records whether the regression REPRODUCES in isolation.
+    # Run-order/co-scheduling noise (HEADLINE insertions shift
+    # which query pays a neighbor's shared materialization) dies
+    # here instead of consuming judge/builder attention; only
+    # `reproduced: true` rows deserve a plan investigation.
+    for n, reg in (regressions or {}).items():
+        iso = bench_query(QUERIES[n])[1][1]
+        reg["isolated"] = round(iso, 3)
+        reg["reproduced"] = bool(
+            iso - reg["drift_expected"] > reg["noise_gate"]
+            and iso > 1.5 * reg["drift_expected"]
+        )
+
+    line = json.dumps(result)
     # Robust reporting: persist the full JSON to a file BEFORE printing
     # (round 3's stdout capture truncated the line's tail, losing the
     # total), print on a fresh line, and flush explicitly so a crash in
@@ -456,11 +433,7 @@ def main() -> None:
     # scaling.per_query block) — the driver's scaling comparison can
     # read bench_result_c{cpus}.json pairs instead.
     for out_name in ("bench_result.json", f"bench_result_c{cpus}.json"):
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         out_name),
-            "w",
-        ) as f:
+        with open(os.path.join(repo_dir, out_name), "w") as f:
             f.write(line + "\n")
     sys.stdout.write("\n" + line + "\n")
     # The driver's BENCH artifact keeps only a 2000-char stdout TAIL; the
@@ -472,29 +445,21 @@ def main() -> None:
     compact = json.dumps(
         {
             "metric": "headline_queries_total_sec",
-            "value": round(sum(timings.values()), 3),
+            "value": result["value"],
             "unit": "sec",
             "sf": sf_val,
             "cpus": cpus,
             "n_queries": len(timings),
             "n_regressions_vs_prev": (
-                len(vs_prev["regressions"]) if vs_prev else None
+                len(regressions) if regressions is not None else None
             ),
             "n_reproduced_in_isolation": (
-                sum(
-                    1
-                    for r in vs_prev["regressions"].values()
-                    if r.get("reproduced")
-                )
-                if vs_prev
+                sum(1 for r in regressions.values() if r.get("reproduced"))
+                if regressions is not None
                 else None
             ),
-            "prev_total_common": (
-                vs_prev["prev_total_common"] if vs_prev else None
-            ),
-            "now_total_common": (
-                vs_prev["now_total_common"] if vs_prev else None
-            ),
+            "prev_total_common": (vs_prev or {}).get("prev_total_common"),
+            "now_total_common": (vs_prev or {}).get("now_total_common"),
             "queries_file": "bench_result.json",
         }
     )

@@ -2,72 +2,17 @@
 third graph primitive next to connected components in llmops/dedup.py
 and the co-occurrence graph in workloads/recsys.py).
 
-Scale design: triangle enumeration is two self-equi-joins over an
-ORIENTED edge list — every edge is stored once as (lo, hi) with
-lo < hi, so each triangle {a,b,c} is generated exactly once as
-(a<b<c), never 6×. Both joins are hash equi-joins on a node id (one
-shuffle each; co-partitioning the edge list on src makes the second
-probe shuffle-free). The quadratic term is Σ_v deg(v)² from the wedge
-join; the production refinement is degree orientation (point edges
-from low-degree to high-degree endpoints, tie-break by id), which
-bounds wedges per node by the arboricity — same plan shape, different
-orientation rule, noted per-call-site.
+Scale design: triangle enumeration orients every undirected edge once
+along a total node order (degree, ties by id), so each triangle is
+found exactly once and every out-degree is O(√m); the wedges live
+inside a per-edge adjacency-array intersection, never as join rows
+(see ``triangle_counts``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Canonical (lo, hi) id-orientation with self-loop and duplicate
-    removal — each undirected edge survives exactly once."""
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    return (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(lo.alias("lo"), hi.alias("hi"))
-        .distinct()
-    )
-
-
-def orient_edges_by_degree(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Degree orientation: direct each undirected edge from its
-    lower-degree endpoint to its higher-degree one (ties by id). This
-    bounds every node's OUT-degree by O(√m) on any graph (a node of
-    degree d > √m only points at nodes of degree ≥ d, and there are
-    < 2√m of those), which caps the wedge join at O(m^1.5) total —
-    the difference between 'hub nodes square the join' and 'it
-    scales'. The degree table is node-sized and broadcast."""
-    return _degree_orient(orient_edges(edges, src, dst))
-
-
-def _degree_orient(e: DataFrame) -> DataFrame:
-    """Degree-orient an ALREADY canonical (lo, hi) distinct edge list.
-
-    Degree is one explode pass over the edge list (each edge credits
-    both endpoints once — identical counts to the union-of-two-selects
-    formulation, one scan instead of two), then the orientation flips
-    each edge toward its higher-(deg, id) endpoint via two broadcast
-    joins on the node-sized degree table."""
-    deg = (
-        e.select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    dl = F.broadcast(deg.selectExpr("node AS lo", "deg AS deg_lo"))
-    dh = F.broadcast(deg.selectExpr("node AS hi", "deg AS deg_hi"))
-    with_deg = e.join(dl, "lo").join(dh, "hi")
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    return with_deg.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-    )
 
 
 def pagerank(

@@ -22,8 +22,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # Keep Spark's default: cached-plan output partitioning stays
     # PINNED (false). Round 7 set this true to let AQE coalesce
     # shared_plan builders in vanilla 200-partition sessions, but the
-    # round-8 A/B (tools/bisect_cachedplan.py, 3 runs each, fresh
-    # sessions, bench protocol) measured `true` as a pure regression in
+    # round-8 A/B (commit 034f925, 3 runs each, fresh sessions, bench
+    # protocol) measured `true` as a pure regression in
     # the bench session: l43 1.23->1.93s warm (+57%), rs11 2.55->3.44s
     # (+35%), and the full 133-query bench 125.5s (true) -> 121.7s
     # (false) with the l02/l04/l10 driver-bench anomalies reverting

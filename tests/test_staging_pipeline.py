@@ -42,6 +42,52 @@ def test_articles_staging_latest_batch_and_types(spark, raw_articles):
     assert_unique_not_null(staged, "article_id")
 
 
+def test_csv_ingest_roundtrip_into_articles_staging(spark, tmp_path):
+    """S1-S4 end to end: headered CSV -> csv_to_envelope -> write_raw
+    (two appended ETL batches) -> read_raw -> articles_staging keeps
+    exactly the latest batch's rows, typed."""
+    import csv
+
+    from pyspark_recs.io.ingest import csv_to_envelope, read_raw, write_raw
+    from pyspark_recs.schemas import ARTICLES_FIELDS
+    from tests.conftest import (
+        ARTICLES,
+        NEW_BATCH,
+        OLD_BATCH,
+        OLD_ONLY_ARTICLE,
+    )
+
+    raw = str(tmp_path / "raw_articles")
+    for name, rows, (etl_id, etl_ts) in (
+        ("old.csv", ARTICLES + [OLD_ONLY_ARTICLE], OLD_BATCH),
+        ("new.csv", ARTICLES, NEW_BATCH),
+    ):
+        path = tmp_path / name
+        with open(path, "w", newline="") as f:
+            writer = csv.DictWriter(f, fieldnames=list(ARTICLES[0]))
+            writer.writeheader()
+            writer.writerows(rows)
+        envelope = csv_to_envelope(spark, str(path), "articles", etl_id, etl_ts)
+        write_raw(envelope, raw)
+
+    loaded = read_raw(spark, raw)
+    assert sorted(
+        (r.etl_id, r.etl_timestamp, r.event_type) for r in loaded.collect()
+    ) == sorted(
+        [(*OLD_BATCH, "articles")] * 5 + [(*NEW_BATCH, "articles")] * 4
+    )
+    expected = sorted(
+        tuple(
+            a[name] if dtype.typeName() == "string" else int(a[name])
+            for name, dtype in ARTICLES_FIELDS
+        )
+        for a in ARTICLES
+    )
+    assert sorted(tuple(r) for r in articles_staging(loaded).collect()) == (
+        expected
+    )
+
+
 def test_customers_staging_empty_string_defaulting(spark, raw_customers):
     staged = customers_staging(raw_customers)
     got = {r.customer_id: (r.active, r.fn, r.age) for r in staged.collect()}

@@ -1,8 +1,8 @@
 """In-session bench-protocol probe for A/B decisions: for each named
-query, run the EXACT bench measurement (checksum driver, 2 warm-ups,
-then N measured runs) in one shared session and print all run times —
-so a code A/B compares the same protocol the driver's bench uses,
-with enough reps to see the spread.
+query, run the EXACT bench measurement (``pyspark_recs.measure``:
+checksum driver, 2 warm-ups, then N measured runs) in one shared
+session and print all run times, sorted — so a code A/B compares the
+same protocol bench.py uses, with enough reps to see the spread.
 
 Usage: python tools/probe_bench.py [sf_dir] [n_runs] <query> [...]
 """
@@ -12,7 +12,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -23,30 +22,17 @@ def main() -> int:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     names = sys.argv[3:]
 
-    from pyspark.sql import functions as F
-
+    from pyspark_recs.measure import measure, run_query
     from pyspark_recs.session import get_spark
     from pyspark_recs.workloads import QUERIES
 
     spark = get_spark("probe-bench")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    def run_query(fn):
-        df = fn(spark, sf)
-        df.select(
-            F.expr("bit_xor(xxhash64(struct(*)))").alias("checksum")
-        ).collect()
-
     for name in names:
-        fn = QUERIES[name]
-        run_query(fn)
-        run_query(fn)
-        runs = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            run_query(fn)
-            runs.append(round(time.perf_counter() - t0, 3))
-        med = sorted(runs)[len(runs) // 2]
+        _, runs = measure(lambda: run_query(spark, QUERIES[name], sf), 2, n)
+        runs = [round(r, 3) for r in runs]
+        med = runs[len(runs) // 2]
         print(
             "PROBE "
             + json.dumps({"query": name, "median": med, "runs": runs}),

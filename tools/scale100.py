@@ -11,7 +11,8 @@ engine makes at scale:
    groups.
 2. **Bit-identical results under re-partitioning** — every query is
    executed at two different ``spark.sql.shuffle.partitions`` settings
-   (32 and 13) and the full-row xxhash64 checksum must match exactly:
+   (32 and 13) and the full-row checksum
+   (``pyspark_recs.measure.run_query``) must match exactly:
    the fixed-point aggregate design means partitioning, AQE decisions
    and spill behavior can never change a result.
 
@@ -330,8 +331,8 @@ def main() -> None:
     os.makedirs(log_dir, exist_ok=True)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
+    from pyspark_recs.measure import run_query
     from pyspark_recs.session import apply_runtime_confs
     from pyspark_recs.workloads import QUERIES
     from pyspark_recs.workloads.common import unpersist_shared
@@ -381,14 +382,10 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         sc.setJobGroup(f"{name}@p{parts}", name)
         t0 = time.perf_counter()
-        row = (
-            QUERIES[name](spark, scale_dir)
-            .select(F.expr("bit_xor(xxhash64(struct(*)))").alias("c"))
-            .collect()
-        )
+        checksum = run_query(spark, QUERIES[name], scale_dir)
         sec = time.perf_counter() - t0
         sc.setJobGroup("idle", "idle")
-        return row[0].c, round(sec, 2)
+        return checksum, round(sec, 2)
 
     for parts in PARTITION_SETTINGS:
         if os.path.isdir(_artifact_root(parts)):

@@ -24,7 +24,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -166,16 +165,6 @@ def build_scratch(scale_dir: str) -> None:
     spark.stop()
 
 
-def time_warm(fn, reps: int = 2) -> float:
-    fn()  # warm-up: plan + codegen / duckdb prepare
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale10"
@@ -188,6 +177,7 @@ def main() -> None:
 
     import duckdb
 
+    from pyspark_recs.measure import measure, run_query
     from pyspark_recs.session import get_spark
     from pyspark_recs.workloads import ORACLE, QUERIES
 
@@ -206,21 +196,21 @@ def main() -> None:
     # column (count() would let Catalyst prune projections/windows) and
     # returns one row (fetchall() on raw results would time transfer,
     # not compute).
-    from pyspark.sql import functions as F
-
-    def spark_run(q):
-        q(spark, scale_dir).select(
-            F.expr("bit_xor(xxhash64(struct(*)))").alias("checksum")
-        ).collect()
-
     def duck_run(sql):
         con.execute(f"SELECT bit_xor(hash(t)) FROM ({sql}) t").fetchall()
 
+    # One warm-up (plan + codegen / duckdb prepare), then the best of
+    # two measured runs.
     results = {}
     for name in HEADLINE:
-        spark_s = time_warm(lambda: spark_run(QUERIES[name]))
-        duck_s = time_warm(lambda: duck_run(ORACLE[name]))
-        results[name] = {"spark": spark_s, "duckdb": duck_s}
+        _, spark_s = measure(
+            lambda: run_query(spark, QUERIES[name], scale_dir), 1, 2
+        )
+        _, duck_s = measure(lambda: duck_run(ORACLE[name]), 1, 2)
+        results[name] = {
+            "spark": round(spark_s[0], 3),
+            "duckdb": round(duck_s[0], 3),
+        }
 
     total_spark = round(sum(r["spark"] for r in results.values()), 3)
     total_duck = round(sum(r["duckdb"] for r in results.values()), 3)

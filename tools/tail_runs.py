@@ -1,8 +1,9 @@
 """3-run protocol for the warm >2 s tail and the cold-materialization
 cluster (VERDICT r8 items #4/#5): each query runs in its OWN fresh
 subprocess session — one cold pass (first materialization, artifact
-loads included), then three warm passes; prints one JSON line per
-query and a summary table for SCALING.md.
+loads included), then three warm passes, each executed by
+``pyspark_recs.measure``'s checksum driver; prints one JSON line per
+query (warm times sorted) and a summary table for SCALING.md.
 
 Usage: python tools/tail_runs.py [sf_dir] [query ...]
 Defaults to the round-8 flagged set.
@@ -33,23 +34,18 @@ DEFAULT = [
 ]
 
 _CHILD = r"""
-import json, sys, time
+import json, sys
 sys.path.insert(0, {repo!r})
+from pyspark_recs.measure import measure, run_query
 from pyspark_recs.session import get_spark
 from pyspark_recs.workloads import QUERIES
 
 name, sf = {name!r}, {sf!r}
 spark = get_spark("tail-" + name)
-t0 = time.perf_counter()
-QUERIES[name](spark, sf).collect()
-cold = time.perf_counter() - t0
-warm = []
-for _ in range(3):
-    t0 = time.perf_counter()
-    QUERIES[name](spark, sf).collect()
-    warm.append(round(time.perf_counter() - t0, 3))
+cold, warm = measure(lambda: run_query(spark, QUERIES[name], sf), 1, 3)
 print("RESULT " + json.dumps(
-    {{"query": name, "cold": round(cold, 3), "warm": warm}}))
+    {{"query": name, "cold": round(cold, 3),
+      "warm": [round(w, 3) for w in warm]}}))
 """
 
 
