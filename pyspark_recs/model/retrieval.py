@@ -9,8 +9,9 @@ the towers degenerate to id embeddings, and
 ``recommendForUserSubset`` is the blocked-GEMM top-k (no crossJoin).
 
 Grid-search fan-out (M2, my_merlin_flow.py:248-263) runs explicit
-time-split evaluation — NOT random CV — matching the reference's
-foreach over hyperparameter configs.
+time-split evaluation — NOT random CV — and runs the configs
+concurrently, matching the reference's parallel foreach over
+hyperparameter configs.
 """
 
 from __future__ import annotations
@@ -184,21 +185,26 @@ def grid_search(
     param_grid: list[dict],
     k: int = 10,
     seed: int = 42,
-    max_workers: int = 1,
     train_fn=None,
 ) -> list[GridResult]:
     """Explicit hyperparameter fan-out with time-split validation (M2) +
     argmax selection by recall@k (A4, my_merlin_flow.py:355-364).
 
-    ``max_workers > 1`` reproduces the reference's parallel foreach over
-    configs (my_merlin_flow.py:263, ``--max-workers 4``): fits are
-    submitted concurrently from a thread pool, each thread tagged with
-    its own FAIR scheduler pool so one long fit can't starve the others
-    (Spark job scheduling is thread-local via
-    ``spark.scheduler.pool``; set ``spark.scheduler.mode=FAIR`` on the
-    session to honor it). The driver threads only coordinate — all data
-    work stays on executors. Returns results sorted best-first by
-    recall@k (ties broken by grid order, deterministically).
+    The reference runs the configs as a parallel foreach
+    (my_merlin_flow.py:263, ``--max-workers 4``); here every config is
+    submitted at once from a pool of ``min(len(param_grid),
+    defaultParallelism)`` driver threads, and their jobs share the
+    session's default FIFO scheduler. The threads only coordinate: what
+    they overlap is the driver-side work of each fit (py4j round trips,
+    planning, MLlib's per-iteration job submission), which otherwise
+    leaves the executors idle between jobs. All data work stays on
+    executors.
+
+    Every config reads the same training matrix and validation truth,
+    so both are cached and materialized once, before the fan-out, and
+    released when this returns; the fits never re-run their upstream
+    lineage. Returns results sorted best-first by recall@k (ties broken
+    by grid order, deterministically).
 
     ``train_fn`` overrides the trainer (tests inject instrumented
     trainers); defaults to ``train_als``."""
@@ -207,26 +213,25 @@ def grid_search(
     from pyspark_recs.model.metrics import ranking_metrics
 
     fit = train_fn or train_als
-    spark = train.sparkSession
-    users = valid_truth.select("user_id").distinct()
+    sc = train.sparkSession.sparkContext
+    workers = min(len(param_grid), sc.defaultParallelism)
+    train, valid_truth = train.cache(), valid_truth.cache()
+    try:
+        train.count()
+        valid_truth.count()
+        users = valid_truth.select("user_id").distinct()
 
-    def run_one(idx_params):
-        idx, params = idx_params
-        sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"grid-{idx}")
-        try:
+        def run_one(params):
             model = fit(train, seed=seed, **params)
             preds = recommend_topk(model, users, k=k)
             metrics = ranking_metrics(preds, valid_truth, k=k)
             return GridResult(params=params, metrics=metrics, model=model)
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
 
-    if max_workers <= 1:
-        results = [run_one(ip) for ip in enumerate(param_grid)]
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            results = list(pool.map(run_one, enumerate(param_grid)))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            results = list(pool.map(run_one, param_grid))
+    finally:
+        train.unpersist()
+        valid_truth.unpersist()
     return sorted(
         results, key=lambda r: r.metrics[f"recall_at_{k}"], reverse=True
     )

@@ -11,6 +11,17 @@ are fit-before-transform and train-before-evaluate. Artifacts
 (dictionaries, models, predictions) persist as parquet — no pickled
 driver state, no artifact tarballs (SURVEY §2.1 S12 is deliberately
 unnecessary here).
+
+A frame is cached only where more than one action consumes it, and
+released before ``run_flow`` returns:
+
+- the filtered ``dataset``: the Categorify fit and all three splits;
+- the grid's training interactions and validation truth (cached inside
+  ``grid_search``): every config's fit and evaluation, with the configs
+  running concurrently on ``min(len(param_grid), defaultParallelism)``
+  driver threads;
+- the test-split top-k predictions: the test metrics and the keyed
+  export.
 """
 
 from __future__ import annotations
@@ -141,53 +152,56 @@ def run_flow(
     cfg = cfg or FlowConfig()
     validate_config(cfg)
 
+    # Consumed by the Categorify fit and by all three splits.
     dataset = build_dataset(
         raw_articles, raw_customers, raw_transactions, raw_images, cfg
-    )
-    # One genuine reuse point (SURVEY §4: dbt materializes every model;
-    # we cache only where consumed more than once).
-    dataset = dataset.cache()
+    ).cache()
+    try:
+        train, valid, test = time_splits(dataset, cfg)
 
-    train, valid, test = time_splits(dataset, cfg)
-
-    # Categorify fit on the union = the whole filtered dataset (O5
-    # semantics, my_merlin_flow.py:233): shared category space.
-    cat = Categorify(["customer_id"]).fit(dataset)
-    encode = lambda df: cat.transform(df).withColumnRenamed(  # noqa: E731
-        "customer_id_code", "customer_code"
-    )
-    train_i = interactions_from(encode(train))
-    valid_truth = (
-        encode(valid)
-        .select(
-            F.col("customer_code").alias("user_id"),
-            F.col("article_id").alias("item_id"),
+        # Categorify fit on the union = the whole filtered dataset (O5
+        # semantics, my_merlin_flow.py:233): shared category space.
+        cat = Categorify(["customer_id"]).fit(dataset)
+        encode = lambda df: cat.transform(df).withColumnRenamed(  # noqa: E731
+            "customer_id_code", "customer_code"
         )
-        .distinct()
-    )
-    test_truth = (
-        encode(test)
-        .select(
-            F.col("customer_code").alias("user_id"),
-            F.col("article_id").alias("item_id"),
+
+        def truth(df):
+            return (
+                encode(df)
+                .select(
+                    F.col("customer_code").alias("user_id"),
+                    F.col("article_id").alias("item_id"),
+                )
+                .distinct()
+            )
+
+        test_truth = truth(test)
+
+        # M2 fan-out + A4 argmax selection.
+        results = grid_search(
+            interactions_from(encode(train)),
+            truth(valid),
+            cfg.param_grid,
+            k=cfg.top_k,
+            seed=cfg.seed,
         )
-        .distinct()
-    )
+        best = results[0]
 
-    # M2 fan-out + A4 argmax selection.
-    results = grid_search(
-        train_i, valid_truth, cfg.param_grid, k=cfg.top_k, seed=cfg.seed
-    )
-    best = results[0]
-
-    # Held-out test metrics (M3) + batch top-k inference (M4/M5).
-    test_users = test_truth.select("user_id").distinct()
-    preds = recommend_topk(best.model, test_users, k=cfg.top_k)
-    test_metrics = ranking_metrics(preds, test_truth, k=cfg.top_k)
-
-    keyed = predictions_table(preds, k=cfg.top_k)
-    if export_path:
-        kv_export_parquet(keyed, export_path)
+        # Held-out test metrics (M3) + batch top-k inference (M4/M5).
+        # The predictions feed both the metrics and the export, so the
+        # recommendForUserSubset cross-join runs once.
+        test_users = test_truth.select("user_id").distinct()
+        preds = recommend_topk(best.model, test_users, k=cfg.top_k).cache()
+        try:
+            test_metrics = ranking_metrics(preds, test_truth, k=cfg.top_k)
+            keyed = predictions_table(preds, k=cfg.top_k)
+            if export_path:
+                kv_export_parquet(keyed, export_path)
+        finally:
+            preds.unpersist()
+    finally:
+        dataset.unpersist()
 
     return FlowResult(
         best_params=best.params,

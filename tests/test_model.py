@@ -165,12 +165,10 @@ def test_rerank_on_als_candidates_keeps_recall_floor(spark, planted):
 
 
 def test_grid_search_parallel_matches_sequential(spark, planted):
-    """max_workers=2 submits fits concurrently (distinct threads
-    observed) and selects the same winner as the sequential path."""
+    """grid_search submits its fits concurrently (distinct threads
+    observed) over inputs it caches once, and every result equals a
+    plain sequential loop over the uncached inputs, exactly."""
     import threading
-
-    from pyspark_recs.model import grid_search
-    from pyspark_recs.model.retrieval import train_als
 
     train, heldout = planted
     grid = [
@@ -183,13 +181,18 @@ def test_grid_search_parallel_matches_sequential(spark, planted):
         seen_threads.append(threading.current_thread().name)
         return train_als(df, seed=seed, **params)
 
-    results = grid_search(
-        train, heldout, grid, k=10, max_workers=2, train_fn=instrumented
-    )
+    results = grid_search(train, heldout, grid, k=10, train_fn=instrumented)
     assert len(set(seen_threads)) == 2  # genuinely fanned out
+
+    users = heldout.select("user_id").distinct()
+    seq = []
+    for params in grid:
+        model = train_als(train, seed=42, **params)
+        preds = recommend_topk(model, users, k=10)
+        seq.append((params, ranking_metrics(preds, heldout, k=10)))
+    seq.sort(key=lambda pm: pm[1]["recall_at_10"], reverse=True)
+    assert [(r.params, r.metrics) for r in results] == seq
     assert results[0].params["rank"] == 8
-    seq = grid_search(train, heldout, grid, k=10)
-    assert results[0].metrics == seq[0].metrics
 
 
 def _planted_content_data(spark):

@@ -63,6 +63,33 @@ def test_run_flow_end_to_end(
     assert point_lookup(spark, export, "missing-user") == []
 
 
+def test_run_flow_releases_what_it_caches(
+    spark, raw_articles, raw_customers, raw_transactions, raw_images
+):
+    # The cache-lint teardown invariant, applied to the flow: every frame
+    # run_flow or its (two-config, concurrent) grid caches is released
+    # before it returns, so no later identical plan can be served from
+    # this run's blocks; the ALS factor RDDs go with unpersist_shared.
+    from pyspark_recs.workloads.common import (
+        persistent_rdd_snapshot,
+        unpersist_shared,
+    )
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    unpersist_shared(spark)
+    assert cache_manager.isEmpty()  # precondition: nothing cached yet
+    before = persistent_rdd_snapshot(spark)
+    cfg = FlowConfig(
+        min_purchases=4,
+        top_k=3,
+        param_grid=[{"rank": 4, "max_iter": 5}, {"rank": 2, "max_iter": 2}],
+    )
+    run_flow(spark, raw_articles, raw_customers, raw_transactions, raw_images, cfg)
+    assert cache_manager.isEmpty()
+    unpersist_shared(spark)
+    assert persistent_rdd_snapshot(spark) == before
+
+
 def test_predictions_table_shape_and_order(spark):
     recs = spark.createDataFrame(
         [(1, 30, 0.5, 2), (1, 10, 0.9, 1), (2, 20, 0.8, 1)],
