@@ -44,7 +44,7 @@ def pagerank(
     rank ≤ 1 and scale 12, terms stay < 10^12 and sums < 2^63 up to
     ~9 M in-edges per node per 2^63/10^12; raise/lower scale to taste.
 
-    Scale: edges are cached once and re-scanned per iteration; ranks
+    Scale: edges are snapshotted once and re-scanned per iteration; ranks
     are node-sized. Per iteration: one equi-join edges⋈ranks on src
     (co-partition or broadcast ranks when the node set is small), one
     groupBy(dst) exact sum, one left join nodes⋈sums. Every
@@ -71,11 +71,10 @@ def pagerank(
         .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
     )
-    nodes = (
+    nodes = snapshot_plan(
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
-        .cache()
     )
     n = nodes.count()  # scalar driver-side; the only collect
     inv_n = 1.0 / float(n)
@@ -116,15 +115,12 @@ def pagerank(
             if prev is not None:
                 prev.unpersist()
             prev = ranks
-    # nodes/the last materialized round stay cached for the caller's
-    # action on the returned (lazy) ranks — register them so session
-    # teardown releases them (the r89 lint class). e is a snapshot_plan
-    # (self-registered).
-    from pyspark_recs.workloads.common import register_persisted
-
-    register_persisted(nodes)
+    # The returned lazy ranks read e and nodes (snapshots) and, past
+    # the first rotation, the last cached round: snapshot the result
+    # then, so the caller's plan never reads a CacheManager entry.
     if prev is not None:
-        register_persisted(prev)
+        ranks = snapshot_plan(ranks)
+        prev.unpersist()
     return ranks
 
 
@@ -182,7 +178,7 @@ def personalized_pagerank(
             .distinct()
         )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # Pre-join out-degrees ONCE and cache: the iteration then needs a
+    # Pre-join out-degrees ONCE and snapshot: the iteration then needs a
     # single join per hop, and broadcasting the frontier (bounded by
     # the seed neighborhood, not the graph) keeps the big edge side
     # unshuffled — without the hint Spark's unknown-size estimate for
@@ -192,13 +188,10 @@ def personalized_pagerank(
     # user-item pairs). For frontiers past the broadcast budget (huge seed sets,
     # many hops on a connected graph), drop the hint and pre-bucket the
     # edge table on src instead.
-    from pyspark_recs.workloads.common import register_persisted
-
-    # Both caches feed every hop of the returned lazy plan — registered
-    # so session teardown releases them (the r89 lint class).
-    e_deg = register_persisted(e.join(deg, "src").cache())
-    s = register_persisted(
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().cache()
+    # Both snapshots feed every hop of the returned lazy plan.
+    e_deg = snapshot_plan(e.join(deg, "src"))
+    s = snapshot_plan(
+        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     )
     n_seeds = s.count()
     inv_s = 1.0 / float(n_seeds)
@@ -512,10 +505,9 @@ def khop_min_distance(
         pinned.append(nxt)
         pinned.append(visited)
         frontier = nxt.select("node")
-    result = visited
-    result.count()  # materialize before releasing the per-hop caches
+    # Snapshot the result before releasing the per-hop caches; it and
+    # e release at session teardown.
+    result = snapshot_plan(visited)
     for df in pinned:
-        if df is not result:
-            df.unpersist()
-    # e is a snapshot_plan; its blocks release at session teardown.
+        df.unpersist()
     return result

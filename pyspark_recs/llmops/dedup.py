@@ -374,7 +374,7 @@ def connected_components(
     themselves.  Raises ``RuntimeError`` if ``max_iter`` rounds pass
     without convergence — silently returning split components would make
     dedup quietly under-merge.  Intermediate caches are unpersisted each
-    round; only the returned labels stay cached for the caller.
+    round; the returned labels are a ``snapshot_plan``.
     """
     # Materialize the edge list once — it is consumed every iteration
     # (join + convergence check), and recomputing its upstream (LSH +
@@ -418,20 +418,20 @@ def connected_components(
             break
     sym.unpersist()
     if not converged:
+        labels.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "a component has diameter > max_iter and would be silently "
             "split — raise max_iter"
         )
-    # The returned labels stay cached for the caller, so they must be
-    # released at session teardown like every internally-persisted
-    # intermediate — otherwise each CC fit leaks one cached frame for
-    # the session's lifetime (the r89 leak class the registry-wide
-    # cache lint checks for).
-    from pyspark_recs.workloads.common import register_persisted
+    # The returned labels are a run-scoped snapshot (released at session
+    # teardown), never a CacheManager entry a later identical build
+    # would be served from.
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    register_persisted(labels)
-    return labels
+    out = snapshot_plan(labels)
+    labels.unpersist()
+    return out
 
 
 def blocked_edit_pairs(
@@ -746,11 +746,11 @@ def duplicate_text_spans(
         F.col(id_col), words.alias("words"), F.size(words).alias("n_tokens")
     )
     # One tokenization feeds grams AND the base counts; gram table
-    # feeds the dup-gram fit AND the position probe. Both registered
-    # so session teardown releases them (the r89 lint class).
-    from pyspark_recs.workloads.common import register_persisted
+    # feeds the dup-gram fit AND the position probe. Both are
+    # run-scoped snapshots, released at session teardown.
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    toks = register_persisted(toks.cache())
+    toks = snapshot_plan(toks)
     grams = (
         toks.filter(F.col("n_tokens") >= k)
         .select(
@@ -767,7 +767,7 @@ def duplicate_text_spans(
             id_col, "n_tokens", "pos", md5_long(F.col("gram")).alias("gh")
         )
     )
-    grams = register_persisted(grams.cache())
+    grams = snapshot_plan(grams)
     dup_grams = (
         grams.groupBy("gh")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))

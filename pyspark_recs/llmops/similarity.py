@@ -1746,16 +1746,16 @@ def lloyd_kmeans_fixed(
         ).alias("q"),
     )
     from pyspark_recs.workloads.common import (
-        PersistedRddHandle,
         persisted_ids,
         register_persisted,
         release_persisted_ids,
+        snapshot_plan,
     )
 
     spark = vectors.sparkSession
-    # q feeds iters+1 assignment passes and the returned plan —
-    # registered so session teardown releases it (the r89 lint class).
-    q = register_persisted(q.cache())
+    # q feeds iters+1 assignment passes and the returned plan — a
+    # run-scoped snapshot, released at session teardown.
+    q = snapshot_plan(q)
     prev_ckpt_ids: set = set()
     cents = (
         q.orderBy(F.asc("vec_id"))
@@ -1824,14 +1824,14 @@ def lloyd_kmeans_fixed(
         # checkpoint blocks); released only after the new round's
         # block materializes (eager=True), since the new checkpoint
         # computes FROM the old plan. The FINAL round's block backs
-        # the returned plan, so it registers for session teardown via
-        # an RDD-level handle instead.
+        # the returned plan, so its ids register for session teardown
+        # instead.
         pre_ckpt = persisted_ids(spark)
         cents = cents.localCheckpoint(eager=True)
         new_ckpt_ids = persisted_ids(spark) - pre_ckpt
         release_persisted_ids(spark, prev_ckpt_ids)
         prev_ckpt_ids = new_ckpt_ids
-    register_persisted(PersistedRddHandle(spark, prev_ckpt_ids))
+    register_persisted(spark, prev_ckpt_ids)
 
     final = assign(cents)
     stats = final.groupBy("cell_id").agg(

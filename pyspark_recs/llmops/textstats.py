@@ -412,13 +412,12 @@ def heavy_hitters(
         F.spark_partition_id().alias("pid"),
     )
     # The returned plan reads toks three times (local counts, partition
-    # sizes, exact recount) — cached, and REGISTERED so session
-    # teardown releases it (the cache must outlive this call; the r89
-    # lint class).
-    from pyspark_recs.workloads.common import register_persisted
+    # sizes, exact recount) — a run-scoped snapshot, released at
+    # session teardown (it must outlive this call).
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    toks = register_persisted(toks.cache())
-    total = toks.count()  # N: one job, also materializes the cache
+    toks = snapshot_plan(toks)
+    total = toks.count()  # N: one job over the snapshot blocks
     # Phase 1: per-partition counts and local threshold. A token with
     # global count > N/k must exceed N_p/k in ≥1 partition p (else
     # summing the per-partition bounds gives ≤ Σ N_p/k = N/k).
@@ -470,11 +469,11 @@ def rare_token_score(
     broadcast. Two shuffles total (unigram agg, per-doc re-agg).
     """
     toks = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("token"))
-    # Consumed twice (unigram agg + scoring join) — cached and
-    # registered for session teardown, as in heavy_hitters above.
-    from pyspark_recs.workloads.common import register_persisted
+    # Consumed twice (unigram agg + scoring join) — snapshotted, as in
+    # heavy_hitters above.
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    toks = register_persisted(toks.cache())
+    toks = snapshot_plan(toks)
     unigrams = toks.groupBy("token").agg(F.count("*").alias("tok_cnt"))
     total = toks.count()
     scored = (
@@ -878,10 +877,10 @@ def bigram_lm_score(
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # fit + score read it once each — registered for session teardown
-    from pyspark_recs.workloads.common import register_persisted
+    # fit + score read it once each — snapshotted
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    dbc = register_persisted(dbc.cache())
+    dbc = snapshot_plan(dbc)
     big = (
         dbc.groupBy("bigram")
         .agg(F.sum("cnt").alias("c12"))
@@ -954,11 +953,10 @@ def dsir_importance(
         "_t",
         (md5_long(F.col("token")) % n_buckets).alias("bucket"),
     )
-    # raw counts, target counts, doc multisets — registered for
-    # session teardown
-    from pyspark_recs.workloads.common import register_persisted
+    # raw counts, target counts, doc multisets — snapshotted
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    tb = register_persisted(tb.cache())
+    tb = snapshot_plan(tb)
     raw = tb.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     tgt = (
         tb.filter(F.col("_t") == target_value)

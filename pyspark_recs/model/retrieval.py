@@ -75,14 +75,10 @@ def train_als(
     # API is general and duplicate (user,item) rows with different
     # ratings would otherwise make the layout input-order-dependent.
     # MLlib keeps the fitted factor RDDs ("userFactors"/"itemFactors")
-    # persisted with no DataFrame to unpersist — register an RDD-level
-    # handle scoped to the ids this fit created, so session teardown
-    # (unpersist_shared) releases them (the r89 cache-lint class).
-    from pyspark_recs.workloads.common import (
-        PersistedRddHandle,
-        persisted_ids,
-        register_persisted,
-    )
+    # persisted with no DataFrame to unpersist — register the ids this
+    # fit created, so session teardown (unpersist_shared) releases them
+    # (the r89 cache-lint class).
+    from pyspark_recs.workloads.common import persisted_ids, register_persisted
 
     spark = ratings.sparkSession
     pre = persisted_ids(spark)
@@ -91,9 +87,7 @@ def train_als(
             user_col, item_col, rating_col
         )
     )
-    register_persisted(
-        PersistedRddHandle(spark, persisted_ids(spark) - pre)
-    )
+    register_persisted(spark, persisted_ids(spark) - pre)
     return model
 
 

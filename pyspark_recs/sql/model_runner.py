@@ -14,14 +14,10 @@ INLINED, so Catalyst sees the whole DAG as one fused plan and optimizes
 ACROSS model boundaries (predicate pushdown through three models deep,
 column pruning of staging columns the final model never reads) — the
 warehouse version materializes every intermediate to storage and
-re-parses each model in isolation. Materialization becomes an opt-in
-per-model choice (``materialize=`` caches the cut point) used only
-where the DAG genuinely fans out, mirroring dbt's ``materialized:
-table`` without paying it everywhere.
+re-parses each model in isolation.
 
 Scale: the runner only builds logical plans — execution stays whatever
-the fused plan is; a cached cut point shuffles once and serves all
-consumers.
+the fused plan is.
 """
 
 from __future__ import annotations
@@ -74,23 +70,17 @@ def run_models(
     spark: SparkSession,
     models: dict[str, str],
     sources: dict[str, DataFrame] | None = None,
-    materialize: tuple[str, ...] = (),
 ) -> dict[str, DataFrame]:
     """Compile and register every model; return name → DataFrame.
 
     ``sources`` are input DataFrames registered as temp views first (the
-    RAW layer); ``materialize`` names models to ``.cache()`` — the
-    fan-out cut points where dbt's table materialization actually pays
-    (e.g. the reference's ``joined_dataframe``, consumed by both the
-    filter model and the flow)."""
+    RAW layer)."""
     for name, df in (sources or {}).items():
         df.createOrReplaceTempView(name)
     out: dict[str, DataFrame] = {}
     for name in topo_order(models):
         compiled = _REF.sub(lambda m: m.group(1), models[name])
         df = spark.sql(compiled)
-        if name in materialize:
-            df = df.cache()
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

@@ -295,25 +295,19 @@ def ranked_by_range(
     boundary placement only unbalances partition sizes, never changes
     which keys precede which. ``order_cols`` MUST be a total order
     (add a unique tiebreak column) or local row_number tie order leaks
-    into the ranks. The repartitioned frame is persisted so the
-    offsets branch and the rank branch see identical partition ids —
-    it must be aggregate-sized (dictionary values, per-entity rollups),
-    never a raw fact table.
+    into the ranks. The repartitioned frame is snapshotted
+    (``snapshot_plan``) so the offsets branch and the rank branch see
+    identical partition ids — it must be aggregate-sized (dictionary
+    values, per-entity rollups), never a raw fact table.
     """
+    from pyspark_recs.workloads.common import snapshot_plan
+
     spark = df.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = snapshot_plan(
         df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
-    # Register the persisted intermediate for session teardown —
-    # unpersist_shared releases it alongside the shared plans, so
-    # repeated Categorify fits in a long-lived session don't grow
-    # cached storage monotonically.
-    from pyspark_recs.workloads.common import register_persisted
-
-    register_persisted(ranged)
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         ranged.groupBy("_pid")
@@ -350,7 +344,7 @@ def ntile_by_range(
     first ``n mod k`` buckets hold ``n div k + 1`` rows, the rest
     ``n div k``. ``total`` is the row count (a bounded driver scalar);
     pass it when the caller already knows it, else the frame is
-    persisted (and registered for teardown) and counted here.
+    snapshotted (``snapshot_plan``) and counted here.
 
     .. warning:: ``total`` is TRUSTED. A wrong value silently yields
        wrong buckets — there is no detection path, because the bucket
@@ -365,10 +359,9 @@ def ntile_by_range(
     (per-entity rollups), never a raw fact table.
     """
     if total is None:
-        from pyspark_recs.workloads.common import register_persisted
+        from pyspark_recs.workloads.common import snapshot_plan
 
-        df = df.persist()
-        register_persisted(df)
+        df = snapshot_plan(df)
         total = df.count()
     base, rem = divmod(total, n_buckets)
     cut = rem * (base + 1)

@@ -332,19 +332,20 @@ def artifact_plan(spark, sf: str, key: str, version: str, builder):
     return shared_plan(spark, sf, stem, load_or_build)
 
 
-def register_persisted(df, sf: str = "", key: str | None = None):
-    """Track a frame an operator persisted internally (e.g.
-    ``ranked_by_range``'s range-partitioned intermediate) so
-    ``unpersist_shared`` can release it at teardown — otherwise every
-    such call leaks a cached DataFrame for the session's lifetime."""
-    ck = (
-        df.sparkSession.sparkContext.applicationId,
-        sf,
-        key or f"__persisted_{id(df)}",
-    )
-    with _REGISTRY_LOCK:
-        _SHARED.setdefault(ck, df)
-    return df
+def register_persisted(spark, ids) -> None:
+    """Register persisted RDDs, by id, for session teardown, so
+    ``unpersist_shared`` releases them. This is for RDD-level storage
+    that no DataFrame can unpersist: MLlib's ALS factor RDDs and
+    BinaryClassificationMetrics intermediates, and the localCheckpoint
+    blocks behind a :func:`snapshot_plan` or an iterative operator's
+    final round. A frame an operator materializes for its caller is a
+    ``snapshot_plan``, never a registered ``.cache()``."""
+    ids = set(ids)
+    if ids:
+        handle = _PersistedRddHandle(spark, ids)
+        ck = (spark.sparkContext.applicationId, "", f"__persisted_{id(handle)}")
+        with _REGISTRY_LOCK:
+            _SHARED[ck] = handle
 
 
 def persistent_rdd_snapshot(spark) -> list:
@@ -367,8 +368,8 @@ def persistent_rdd_snapshot(spark) -> list:
 def release_persisted_ids(spark, ids) -> int:
     """Unpersist the persisted RDDs with exactly these ids. Used by
     iterative operators to drop SUPERSEDED localCheckpoint rounds while
-    the live one keeps serving, and by :class:`PersistedRddHandle` for
-    RDD-level storage (MLlib factor RDDs, final checkpoints) that
+    the live one keeps serving, and at teardown for the ids passed to
+    :func:`register_persisted` (MLlib factor RDDs, checkpoints) that
     ``DataFrame.unpersist`` cannot reach."""
     ids = set(ids)
     if not ids:
@@ -387,28 +388,26 @@ def release_persisted_ids(spark, ids) -> int:
     return len(rdds)
 
 
-class PersistedRddHandle:
-    """Duck-typed registree for :func:`register_persisted` when the
-    persisted storage is an RDD rather than a CacheManager entry —
-    MLlib keeps ALS factor RDDs and BinaryClassificationMetrics
-    intermediates persisted with no DataFrame to unpersist, and a
-    plan-serving ``localCheckpoint`` can only be dropped at the RDD
-    level. ``unpersist()`` (what ``unpersist_shared`` calls at
-    teardown) force-releases the captured ids."""
+class _PersistedRddHandle:
+    """Teardown entry of :func:`register_persisted`: ``unpersist()``
+    (what ``unpersist_shared`` calls) force-releases the captured
+    ids."""
 
-    def __init__(self, spark, ids):
-        self.sparkSession = spark
-        self._ids = set(ids)
+    def __init__(self, spark, ids: set):
+        self._spark = spark
+        self._ids = ids
 
     def unpersist(self):
-        release_persisted_ids(self.sparkSession, self._ids)
+        release_persisted_ids(self._spark, self._ids)
 
 
 def persisted_ids(spark) -> set:
-    """Just the id set of :func:`persistent_rdd_snapshot` — the
-    snapshot-diff primitive operators use to scope RDD-level releases
-    to storage THEY created."""
-    return {i for i, _ in persistent_rdd_snapshot(spark)}
+    """Ids of every RDD the JVM holds persisted, read in a constant
+    number of py4j calls (one ``mkString`` over the key set, not a
+    walk over the RDDs) — the snapshot-diff primitive operators use to
+    scope RDD-level releases to storage THEY created."""
+    keys = spark.sparkContext._jsc.sc().getPersistentRDDs().keys()
+    return {int(k) for k in keys.mkString(",").split(",") if k}
 
 
 _SNAPSHOT_SEQ = _itertools.count()
@@ -417,8 +416,11 @@ _SNAPSHOT_SEQ = _itertools.count()
 def snapshot_plan(df):
     """Materialize a multiply-consumed intermediate ONCE via
     ``localCheckpoint(eager=True)`` and register the created RDD blocks
-    for session teardown (``unpersist_shared`` → ``PersistedRddHandle``),
-    so the snapshot cannot leak past the cache lint.
+    for session teardown (``register_persisted``), so the snapshot
+    cannot leak past the cache lint. This is the run-scoped primitive:
+    an operator that materializes a frame it returns, or one its
+    returned plan reads, uses it instead of a registered ``.cache()``,
+    which the CacheManager would serve to the next identical build.
 
     This is the optimization-guide §3.3 move ("materialising an
     intermediate result truncates the plan") applied to helpers whose
@@ -456,12 +458,7 @@ def snapshot_plan(df):
         return spark.read.parquet(path)
     before = persisted_ids(spark)
     snap = df.localCheckpoint(eager=True)
-    created = persisted_ids(spark) - before
-    if created:
-        register_persisted(
-            PersistedRddHandle(spark, created),
-            key=f"__snapshot_{next(_SNAPSHOT_SEQ)}",
-        )
+    register_persisted(spark, persisted_ids(spark) - before)
     return snap
 
 
@@ -485,35 +482,6 @@ def _snapshot_scratch_root() -> str:
         _atexit.register(_shutil.rmtree, root, True)
         _SNAPSHOT_SCRATCH.append(root)
     return _SNAPSHOT_SCRATCH[0]
-
-
-def release_local_checkpoints(spark, before_ids=None) -> int:
-    """Unpersist every ``localCheckpoint``-created RDD not present in
-    ``before_ids`` — either a :func:`persistent_rdd_snapshot` list of
-    ``(id, description)`` tuples or a plain set of RDD ids (both
-    shapes accepted; ADVICE r11 fixed the tuple-only unpack).
-    localCheckpoint blocks are NOT recomputable — only call this when
-    nothing live references them anymore (e.g. the result was
-    collected into a literal frame, rs35's shape). The id-diff guard
-    keeps a concurrent operator's live checkpoints untouched."""
-    skip = set()
-    for entry in before_ids or ():
-        skip.add(entry if isinstance(entry, int) else entry[0])
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if int(t._1()) in skip:
-            continue
-        r = t._2()
-        if "localCheckpoint" in (r.toString() or ""):
-            rdds.append(r)
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
-    return len(rdds)
 
 
 def release_all_persistent(spark) -> int:

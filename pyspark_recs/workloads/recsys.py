@@ -15,6 +15,7 @@ from pyspark_recs.workloads.common import (
     artifact_plan,
     dsum,
     shared_plan,
+    snapshot_plan,
     sql_dsum,
 )
 
@@ -1305,7 +1306,6 @@ def rs16_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     space holds both sides.
     """
     from pyspark_recs.graph import personalized_pagerank
-    from pyspark_recs.workloads.common import snapshot_plan
 
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
@@ -1383,22 +1383,18 @@ def rs17_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     proves the formula IS ntile.
     """
     from pyspark_recs.sql import ntile_by_range
-    from pyspark_recs.workloads.common import register_persisted
 
     orders = load_table(spark, sf, "orders")
-    per_cust = (
-        orders.groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(
+    # Snapshotted so the count and the three rank passes below reuse
+    # the aggregate instead of re-aggregating.
+    per_cust = snapshot_plan(
+        orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("n_orders"),
             dsum("o_totalprice").alias("monetary"),
         )
-        .persist()
     )
-    register_persisted(per_cust)
-    # Bounded driver scalar (one long) — also materializes the persist
-    # so the three rank passes below reuse it instead of re-aggregating.
-    n = per_cust.count()
+    n = per_cust.count()  # bounded driver scalar (one long)
     out = per_cust
     for alias, order_col in (
         ("r_score", "last_order"),
@@ -2553,17 +2549,13 @@ def rs28_content_model_eval(spark: SparkSession, sf: str) -> DataFrame:
     assembler, model = train_content_model(data.train, max_iter=10)
     # The summary's AUC computation persists an MLlib-internal RDD
     # (BinaryClassificationMetrics) with no DataFrame to unpersist —
-    # register an RDD-level handle scoped to the ids it creates so
-    # teardown releases them (the r89 cache-lint class).
-    from pyspark_recs.workloads.common import (
-        PersistedRddHandle,
-        persisted_ids,
-        register_persisted,
-    )
+    # register the ids it creates so teardown releases them (the r89
+    # cache-lint class).
+    from pyspark_recs.workloads.common import persisted_ids, register_persisted
 
     _pre = persisted_ids(spark)
     auc = model.summary.areaUnderROC
-    register_persisted(PersistedRddHandle(spark, persisted_ids(spark) - _pre))
+    register_persisted(spark, persisted_ids(spark) - _pre)
     preds = score_candidates(assembler, model, data.eval_candidates, k=10)
     met = ranking_metrics(preds, data.truth, k=10)
     counts = data.train.groupBy("label").agg(
@@ -2967,8 +2959,6 @@ def rs30_ensemble_eval(spark: SparkSession, sf: str) -> DataFrame:
     # the hit flags and the per-user k check, and Spark has no
     # DataFrame CSE — unsnapshotted, the union+RRF+window pipeline ran
     # once per consumer. eval-users × 10 rows, KB-scale.
-    from pyspark_recs.workloads.common import snapshot_plan
-
     ens = snapshot_plan(
         fused.withColumn("frank", F.row_number().over(w_f))
         .filter(F.col("frank") <= 10)
@@ -3784,12 +3774,10 @@ def rs40_serving_config_selection(spark: SparkSession, sf: str) -> DataFrame:
     Scale: the grid is 4 rows over the artifact-served eval tables;
     the ceiling and the winner are 1-row broadcasts.
     """
-    from pyspark_recs.workloads.common import register_persisted
-
     # The grid is 4 rows but its lineage is the whole eval protocol —
-    # cache it (registered for teardown) so the ceiling, the argmax
-    # and the flagged output read one evaluation, not three.
-    grid = register_persisted(rs34_candidate_recall_sweep(spark, sf).persist())
+    # snapshot it so the ceiling, the argmax and the flagged output
+    # read one evaluation, not three.
+    grid = snapshot_plan(rs34_candidate_recall_sweep(spark, sf))
     best = (
         grid.crossJoin(
             F.broadcast(grid.agg(F.max("recall_ppm").alias("max_recall")))
@@ -3849,11 +3837,10 @@ def rs35_kcore_trace(spark: SparkSession, sf: str) -> DataFrame:
 
 def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark_recs.workloads.common import (
-        persistent_rdd_snapshot,
-        release_local_checkpoints,
+        persisted_ids,
+        release_persisted_ids,
     )
 
-    ckpt_before = persistent_rdd_snapshot(spark)
     k = 20
     # The distinct (user, item) edge list IS the shared interaction
     # matrix's key set — ride the session-cached table the whole CF
@@ -3861,6 +3848,9 @@ def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     edges = _shared_interactions(spark, sf).select(
         F.col("user_id").alias("u"), F.col("item_id").alias("i")
     )
+    # Taken after the shared entry resolves, so the diff below holds
+    # only what this build persists.
+    ckpt_before = persisted_ids(spark)
     rows = []
     # Each round's survivors reference the previous round THREE times
     # (edge list + both degree tables), so a lazy lineage grows 3^r —
@@ -3920,7 +3910,7 @@ def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     # dead weight — release the ones THIS build created (id-diff keeps
     # any concurrent operator's live checkpoints untouched; the r89
     # cache-lint class, localCheckpoint flavor).
-    release_local_checkpoints(spark, ckpt_before)
+    release_persisted_ids(spark, persisted_ids(spark) - ckpt_before)
     return spark.createDataFrame(
         rows, "round long, n_edges long, n_users long, n_items long"
     )

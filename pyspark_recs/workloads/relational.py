@@ -3222,9 +3222,7 @@ def r72_sql_model_chain(spark: SparkSession, sf: str) -> DataFrame:
     models; dbt-on-warehouse materializes and re-parses each).
 
     Scale: staging join broadcasts the dim; the rollup combines
-    map-side; revenue is exact integer cents end to end. Opt-in
-    ``materialize=`` caching exists for genuine fan-out cut points —
-    deliberately unused here, single consumer.
+    map-side; revenue is exact integer cents end to end.
     """
     from pyspark_recs.sql.model_runner import run_models
 
@@ -4095,7 +4093,7 @@ def r83_skew_profile(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale: per column this is one map-side-combined count aggregate
     whose output (key-cardinality-sized — 10⁹ rows at 10⁹ customers,
-    so NEVER eligible for a global window) is persisted and consumed
+    so NEVER eligible for a global window) is snapshotted and consumed
     twice: a fully-parallel totals aggregate broadcast back, and a
     TakeOrdered top-5 that the hot-rank window runs above (5 rows).
     One fact scan, no single-partition WindowExec (this exact query
@@ -4103,13 +4101,14 @@ def r83_skew_profile(spark: SparkSession, sf: str) -> DataFrame:
     form computed total/n_keys/rank via three global windows over the
     counts table).
     """
-    from pyspark_recs.workloads.common import register_persisted
+    from pyspark_recs.workloads.common import snapshot_plan
 
     def profile(df: DataFrame, table: str, col: str) -> DataFrame:
-        counts = df.groupBy(F.col(col).alias("key")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).persist()
-        register_persisted(counts)
+        counts = snapshot_plan(
+            df.groupBy(F.col(col).alias("key")).agg(
+                F.count(F.lit(1)).alias("cnt")
+            )
+        )
         tot = counts.agg(
             F.sum("cnt").alias("total"), F.count(F.lit(1)).alias("n_keys")
         )
@@ -4494,15 +4493,14 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
     nation = load_table(spark, sf, "nation")
     # The pair table is consumed three times (the totals row, the
     # backbone filter, and the BFS's distinct'd edge list) and Spark
-    # has no DataFrame CSE — cache it so the 3-join fact aggregation
-    # runs ONCE. It is bounded at ≤ N² nation pairs, so the cache is
-    # KBs at any fact scale. Registered (as is khop's returned visited
-    # frame below) so unpersist_shared releases both at teardown —
-    # repeated r89 calls in a long-lived session must not grow cached
-    # storage monotonically (ADVICE r9).
-    from pyspark_recs.workloads.common import register_persisted
+    # has no DataFrame CSE — snapshot it so the 3-join fact aggregation
+    # runs ONCE. It is bounded at ≤ N² nation pairs, so the snapshot is
+    # KBs at any fact scale; like khop's returned frame below it is
+    # run-scoped, so a repeated r89 call recomputes instead of reading
+    # the previous call's blocks.
+    from pyspark_recs.workloads.common import snapshot_plan
 
-    pair = (
+    pair = snapshot_plan(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cus, F.col("o_custkey") == F.col("c_custkey"))
         .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -4518,9 +4516,7 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
                 )
             ).alias("q")
         )
-        .cache()
     )
-    register_persisted(pair)
     tot = pair.agg(
         F.sum("q").alias("total"), F.count(F.lit(1)).alias("n")
     )
@@ -4532,7 +4528,7 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
     seeds = nation.filter(F.col("n_nationkey") < 5).select(
         F.col("n_nationkey")
     )
-    dist = register_persisted(khop_min_distance(edges, seeds, max_hops=4))
+    dist = khop_min_distance(edges, seeds, max_hops=4)
     return (
         dist.join(
             F.broadcast(nation.select("n_nationkey", "n_name")),

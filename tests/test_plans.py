@@ -364,24 +364,6 @@ def test_model_runner_fuses_chain_into_one_plan(spark):
     assert rows and all(len(r) == 2 for r in rows)
 
 
-def test_model_runner_materialize_caches_cut_point(spark):
-    from pyspark_recs.io import load_table
-    from pyspark_recs.sql.model_runner import run_models
-
-    out = run_models(
-        spark,
-        {
-            "base": "SELECT o_custkey, count(*) AS n FROM orders GROUP BY o_custkey",
-            "top": "SELECT * FROM {{ ref('base') }} WHERE n > 2",
-        },
-        sources={"orders": load_table(spark, "/root/testdata/sf0.001", "orders")},
-        materialize=("base",),
-    )
-    plan = out["top"]._jdf.queryExecution().executedPlan().toString()
-    assert "InMemory" in plan  # the cut point is served from cache
-    out["base"].unpersist()
-
-
 def test_shipping_priority_topk_and_broadcasts(spark):
     # r75 (TPC-H Q3 shape): the top-10 must run as TakeOrderedAndProject
     # (per-partition heads, no global sort) and the filtered
@@ -793,8 +775,8 @@ def test_registry_wide_bounded_window_lint(spark):
 
 def test_cache_lint_flags_an_unregistered_persist(spark):
     # Negative control for the cache-teardown lint (VERDICT r10 #4):
-    # a query-shaped fn that persists + materializes WITHOUT
-    # register_persisted must leave a persisted RDD behind after
+    # a query-shaped fn that persists + materializes WITHOUT releasing
+    # or registering it must leave a persisted RDD behind after
     # unpersist_shared — exactly the r89 leak class tools/cache_lint.py
     # sweeps the whole registry for.
     from pyspark_recs.workloads.common import (
@@ -847,6 +829,64 @@ def test_cache_teardown_previous_leakers_now_clean(spark):
             leaks[q] = left
             release_all_persistent(spark)
     assert not leaks, leaks
+
+
+# Queries whose operators materialize a frame that the returned plan
+# reads (graph iterations, token tables, range-ranked rollups, k-means
+# inputs). An anonymous CacheManager entry left by one run would serve
+# the next identical build.
+ANONYMOUS_CACHE_QUERIES = (
+    "rs39_e2e_pipeline", "l85_kmeans_train", "l84_duplicate_text_spans",
+    "l80_bigram_lm_score", "l81_dsir_importance", "r36_spend_deciles",
+    "r20_categorify_encode_oov", "r19_categorify_dictionary",
+    "rs17_rfm_segments", "rs31_behavioral_audit", "r83_skew_profile",
+    "rs36_exposure_gini", "r89_trade_reach", "l37_heavy_hitters",
+    "l38_rare_token_score", "r57_pagerank_trade",
+    "rs16_personalized_pagerank", "rs40_serving_config_selection",
+)
+
+
+def test_queries_leave_no_anonymous_cache_entries(spark):
+    # Run each query once through the bench's checksum driver and
+    # unpersist only the frames shared_plan returned: the CacheManager
+    # must then be empty, and unpersist_shared must leave no persisted
+    # RDD. tools/cache_lint.py runs the same check over the registry.
+    from tools.cache_lint import lint_query
+
+    from pyspark_recs.workloads.common import (
+        release_all_persistent,
+        unpersist_shared,
+    )
+
+    unpersist_shared(spark)
+    release_all_persistent(spark)
+    bad = {}
+    for q in ANONYMOUS_CACHE_QUERIES:
+        anonymous, left = lint_query(spark, QUERIES[q], SF_DIR)
+        if anonymous or left:
+            bad[q] = {"anonymous_cache_entries": anonymous, "leaked": left}
+            release_all_persistent(spark)
+    assert not bad, bad
+
+
+def test_persisted_ids_matches_the_rdd_walk(spark):
+    # persisted_ids reads the id set in one mkString call; it must agree
+    # with persistent_rdd_snapshot's per-RDD walk.
+    from pyspark_recs.workloads.common import (
+        persisted_ids,
+        persistent_rdd_snapshot,
+        release_all_persistent,
+    )
+
+    frames = [spark.range(10 * i).persist() for i in range(1, 4)]
+    for df in frames:
+        df.count()
+    spark.range(5).localCheckpoint(eager=True)
+    walked = {i for i, _ in persistent_rdd_snapshot(spark)}
+    assert len(walked) >= 4
+    assert persisted_ids(spark) == walked
+    release_all_persistent(spark)
+    assert persisted_ids(spark) == set()
 
 
 def test_window_lint_flags_a_genuinely_global_window(spark):
