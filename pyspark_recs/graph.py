@@ -22,7 +22,6 @@ def pagerank(
     scale: int = 12,
     src: str = "src",
     dst: str = "dst",
-    materialize_every: int = 6,
 ) -> DataFrame:
     """Distributed PageRank over a directed edge list, bit-reproducible
     across engines, partitionings and cluster sizes.
@@ -47,12 +46,11 @@ def pagerank(
     Scale: edges are snapshotted once and re-scanned per iteration; ranks
     are node-sized. Per iteration: one equi-join edges⋈ranks on src
     (co-partition or broadcast ranks when the node set is small), one
-    groupBy(dst) exact sum, one left join nodes⋈sums. Every
-    ``materialize_every`` rounds the rank cache is swapped
-    (materialize-then-unpersist, the l21 connected-components
-    discipline) so lineage and memory stay O(1) in the iteration count
-    — short chains below that cadence stay fully lazy and fuse into a
-    single job instead of paying a checkpoint job per round.
+    groupBy(dst) exact sum, one left join nodes⋈sums. The iterations
+    stay lazy and fuse into the caller's job — the plan grows linearly
+    in ``iterations``, which is fine at the ≤ 3 rounds its callers
+    run; a long run would snapshot each round the way
+    ``llmops.dedup.connected_components`` does.
     """
     mult = float(10**scale)
     from pyspark_recs.workloads.common import snapshot_plan
@@ -81,8 +79,7 @@ def pagerank(
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = nodes.select("node", F.lit(inv_n).alias("rank"))
     teleport = (1.0 - damping) * inv_n
-    prev = None
-    for it in range(1, iterations + 1):
+    for _ in range(iterations):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(deg, "src")
@@ -109,18 +106,6 @@ def pagerank(
                 )
             ).alias("rank"),
         )
-        if it % materialize_every == 0 and it < iterations:
-            ranks = ranks.cache()
-            ranks.count()  # materialize before dropping the previous round
-            if prev is not None:
-                prev.unpersist()
-            prev = ranks
-    # The returned lazy ranks read e and nodes (snapshots) and, past
-    # the first rotation, the last cached round: snapshot the result
-    # then, so the caller's plan never reads a CacheManager entry.
-    if prev is not None:
-        ranks = snapshot_plan(ranks)
-        prev.unpersist()
     return ranks
 
 
@@ -458,10 +443,11 @@ def khop_min_distance(
     FIRST (= minimum) distance. Hop h is two shuffles: the
     frontier⋈edges equi-join on src (broadcast the frontier when it is
     small — here it is nation-sized, so Spark's AQE does) and the
-    distinct. The frontier is materialized per hop (cache + count);
-    the count doubles as the early-exit test so a converged BFS stops
-    issuing jobs, and lineage stays O(1) in depth — the l21
-    connected-components discipline.
+    distinct. Each hop's ``visited`` is a ``snapshot_plan`` and the
+    superseded one is released once the new one has materialized, so
+    lineage stays O(1) in depth (the l21 connected-components
+    discipline); an empty frontier ends the loop, so a converged BFS
+    stops issuing jobs.
 
     Exactness: distances are integer hop counts; no floats anywhere.
     ``seeds``' FIRST column is the seed node id (any name).
@@ -474,7 +460,7 @@ def khop_min_distance(
     # Snapshot (not cache) the pruned edge list: every hop references
     # it, and a cache would re-embed the full backbone-derivation
     # lineage in each hop's plan (see pagerank's note; r12-opt).
-    from pyspark_recs.workloads.common import snapshot_plan
+    from pyspark_recs.workloads.common import release_snapshot, snapshot_plan
 
     e = snapshot_plan(
         edges.filter(F.col(src) != F.col(dst))
@@ -485,29 +471,19 @@ def khop_min_distance(
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("distance"))
-        .cache()
     )
-    frontier = visited.select("node")
-    pinned = [visited]
     for h in range(1, max_hops + 1):
+        frontier = visited.filter(F.col("distance") == h - 1)
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(h).cast("long").alias("distance"))
-            .cache()
         )
-        if nxt.count() == 0:  # converged — also materializes the cache
-            nxt.unpersist()
-            break
-        visited = visited.unionAll(nxt).cache()
-        pinned.append(nxt)
-        pinned.append(visited)
-        frontier = nxt.select("node")
-    # Snapshot the result before releasing the per-hop caches; it and
-    # e release at session teardown.
-    result = snapshot_plan(visited)
-    for df in pinned:
-        df.unpersist()
-    return result
+        grown = snapshot_plan(visited.unionAll(nxt))
+        release_snapshot(visited)
+        visited = grown
+        if visited.filter(F.col("distance") == h).isEmpty():
+            break  # converged: the next frontier is empty
+    return visited

@@ -367,71 +367,60 @@ def connected_components(
 
     Scale: each round is one join + one min-aggregate, shuffles keyed
     by node id; rounds ≈ component diameter (near-dup clusters are
-    shallow). Each round is materialized (cache + count) to truncate
-    lineage — at 100 TB swap cache for localCheckpoint.
+    shallow). Each round is a ``snapshot_plan`` (truncating lineage)
+    and the superseded round is released once the next has
+    materialized, so storage holds at most two rounds at a time.
 
     Output: (node, label) for every node in ``nodes``; singletons label
     themselves.  Raises ``RuntimeError`` if ``max_iter`` rounds pass
     without convergence — silently returning split components would make
-    dedup quietly under-merge.  Intermediate caches are unpersisted each
-    round; the returned labels are a ``snapshot_plan``.
+    dedup quietly under-merge.  The returned labels are the final
+    round's snapshot (released at session teardown).
     """
-    # Materialize the edge list once — it is consumed every iteration
-    # (join + convergence check), and recomputing its upstream (LSH +
-    # Jaccard verification) per round would dominate the runtime.
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .cache()
+    from pyspark_recs.workloads.common import (
+        held,
+        release_snapshot,
+        snapshot_plan,
     )
-    sym.count()
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    )
-    converged = False
-    prev_cached = None
-    for _ in range(max_iter):
-        neighbor_labels = sym.join(
-            labels, sym["b"] == labels["node"]
-        ).select(F.col("a").alias("node"), F.col("label"))
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .cache()
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("label", "old"), "node"
-            )
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        # The convergence-check count materialized new_labels, so the
-        # previous round's cache is dead weight from here on.
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = new_labels
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "a component has diameter > max_iter and would be silently "
-            "split — raise max_iter"
-        )
-    # The returned labels are a run-scoped snapshot (released at session
-    # teardown), never a CacheManager entry a later identical build
-    # would be served from.
-    from pyspark_recs.workloads.common import snapshot_plan
 
-    out = snapshot_plan(labels)
-    labels.unpersist()
-    return out
+    # Hold the edge list for the whole loop — it is consumed every
+    # iteration, and recomputing its upstream (LSH + Jaccard
+    # verification) per round would dominate the runtime.
+    with held(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
+            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+        )
+    ) as (sym,):
+        sym.count()
+        labels = nodes.select(
+            F.col(id_col).alias("node"), F.col(id_col).alias("label")
+        )
+        for _ in range(max_iter):
+            neighbor_labels = sym.join(
+                labels, sym["b"] == labels["node"]
+            ).select(F.col("a").alias("node"), F.col("label"))
+            new_labels = snapshot_plan(
+                labels.unionByName(neighbor_labels)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
+            changed = (
+                new_labels.join(
+                    labels.withColumnRenamed("label", "old"), "node"
+                )
+                .filter(F.col("label") != F.col("old"))
+                .count()
+            )
+            release_snapshot(labels)
+            labels = new_labels
+            if changed == 0:
+                return labels
+    release_snapshot(labels)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds; "
+        "a component has diameter > max_iter and would be silently "
+        "split — raise max_iter"
+    )
 
 
 def blocked_edit_pairs(

@@ -10,7 +10,7 @@ pipeline.run_flow's recsys DAG):
 Each stage is DataFrame→DataFrame; nothing is collected; the funnel
 counts are themselves a DataFrame so the whole flow stays one plan
 until an action runs — EXCEPT the connected-components fixpoint, which
-is inherently iterative (cache + count per round). Callers that want a
+is inherently iterative (one snapshot per round). Callers that want a
 fully lazy serve path pre-compute the canonical ids once (e.g. through
 ``workloads.common.artifact_plan`` — dedup clustering is a standing
 corpus-index job at 100 TB) and inject them via ``canonical_ids``.

@@ -1745,18 +1745,11 @@ def lloyd_kmeans_fixed(
             ).cast("long"),
         ).alias("q"),
     )
-    from pyspark_recs.workloads.common import (
-        persisted_ids,
-        register_persisted,
-        release_persisted_ids,
-        snapshot_plan,
-    )
+    from pyspark_recs.workloads.common import release_snapshot, snapshot_plan
 
-    spark = vectors.sparkSession
     # q feeds iters+1 assignment passes and the returned plan — a
     # run-scoped snapshot, released at session teardown.
     q = snapshot_plan(q)
-    prev_ckpt_ids: set = set()
     cents = (
         q.orderBy(F.asc("vec_id"))
         .limit(n_cells)
@@ -1807,31 +1800,18 @@ def lloyd_kmeans_fixed(
                 ).alias("cvec")
             )
         )
-        cents = (
+        # C rows by construction (the l71 merge-table precedent):
+        # snapshot each round so iteration r+1's plan doesn't re-execute
+        # every earlier assign/update round, and release the superseded
+        # round once the new one has materialized from it. The final
+        # round backs the returned plan.
+        new_cents = snapshot_plan(
             cents.select("cell_id", F.col("cvec").alias("prev"))
             .join(upd.withColumnRenamed("cvec", "new"), "cell_id", "left")
-            .select(
-                "cell_id", F.coalesce("new", "prev").alias("cvec")
-            )
+            .select("cell_id", F.coalesce("new", "prev").alias("cvec"))
         )
-        # C rows by construction (the l71 merge-table precedent):
-        # truncate the lineage so iteration r+1's plan doesn't
-        # re-execute every earlier assign/update round. The superseded
-        # set is the PREVIOUS round's checkpoint ids, tracked by a
-        # snapshot diff taken immediately around each localCheckpoint
-        # call (ADVICE r11: a session-wide description filter would
-        # force-unpersist a concurrent operator's non-recomputable
-        # checkpoint blocks); released only after the new round's
-        # block materializes (eager=True), since the new checkpoint
-        # computes FROM the old plan. The FINAL round's block backs
-        # the returned plan, so its ids register for session teardown
-        # instead.
-        pre_ckpt = persisted_ids(spark)
-        cents = cents.localCheckpoint(eager=True)
-        new_ckpt_ids = persisted_ids(spark) - pre_ckpt
-        release_persisted_ids(spark, prev_ckpt_ids)
-        prev_ckpt_ids = new_ckpt_ids
-    register_persisted(spark, prev_ckpt_ids)
+        release_snapshot(cents)
+        cents = new_cents
 
     final = assign(cents)
     stats = final.groupBy("cell_id").agg(

@@ -619,6 +619,8 @@ def bpe_train_merges(
     driver argmax for ``F.max_by`` into a 1-row DataFrame and keep the
     loop fully lazy.
     """
+    from pyspark_recs.workloads.common import held
+
     wf = (
         df.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .groupBy("w")
@@ -630,54 +632,52 @@ def bpe_train_merges(
             ).alias("form"),
             "freq",
         )
-        .cache()
     )
     spark = df.sparkSession
-    forms = wf
     out_rows = []
-    for rnd in range(1, n_merges + 1):
-        syms = F.split(F.col("form"), "  ")
-        pair_arr = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.concat(
-                    F.element_at(syms, i),
+    with held(wf) as (forms,):
+        for rnd in range(1, n_merges + 1):
+            syms = F.split(F.col("form"), "  ")
+            pair_arr = F.when(
+                F.size(syms) >= 2,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(syms) - 1),
+                    lambda i: F.concat(
+                        F.element_at(syms, i),
+                        F.lit(" "),
+                        F.element_at(syms, i + 1),
+                    ),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+            best = (
+                forms.select(F.explode(pair_arr).alias("pair"), "freq")
+                .groupBy("pair")
+                .agg(F.sum("freq").alias("c"))
+                .orderBy(F.desc("c"), F.asc("pair"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            pair, count = best[0].pair, int(best[0].c)
+            a, b = pair.split(" ")
+            out_rows.append((rnd, pair, a + b, count))
+            # Learned symbols go in as Column LITERALS, never interpolated
+            # into SQL text — a corpus token containing a quote or backslash
+            # (don't, C:\x) must not be able to break or re-shape the
+            # generated expression.
+            pattern, repl = F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
+            forms = forms.select(
+                F.btrim(
+                    F.replace(
+                        F.concat(F.lit(" "), F.col("form"), F.lit(" ")),
+                        pattern,
+                        repl,
+                    ),
                     F.lit(" "),
-                    F.element_at(syms, i + 1),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        best = (
-            forms.select(F.explode(pair_arr).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("c"))
-            .orderBy(F.desc("c"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        pair, count = best[0].pair, int(best[0].c)
-        a, b = pair.split(" ")
-        out_rows.append((rnd, pair, a + b, count))
-        # Learned symbols go in as Column LITERALS, never interpolated
-        # into SQL text — a corpus token containing a quote or backslash
-        # (don't, C:\x) must not be able to break or re-shape the
-        # generated expression.
-        pattern, repl = F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
-        forms = forms.select(
-            F.btrim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("form"), F.lit(" ")),
-                    pattern,
-                    repl,
-                ),
-                F.lit(" "),
-            ).alias("form"),
-            "freq",
-        )
-    wf.unpersist()  # all collects have happened; nothing reads it again
+                ).alias("form"),
+                "freq",
+            )
     return spark.createDataFrame(
         out_rows, "merge_round int, pair string, merged string, pair_count bigint"
     )

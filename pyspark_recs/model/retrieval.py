@@ -205,12 +205,12 @@ def grid_search(
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark_recs.model.metrics import ranking_metrics
+    from pyspark_recs.workloads.common import held
 
     fit = train_fn or train_als
     sc = train.sparkSession.sparkContext
     workers = min(len(param_grid), sc.defaultParallelism)
-    train, valid_truth = train.cache(), valid_truth.cache()
-    try:
+    with held(train, valid_truth) as (train, valid_truth):
         train.count()
         valid_truth.count()
         users = valid_truth.select("user_id").distinct()
@@ -223,9 +223,6 @@ def grid_search(
 
         with ThreadPoolExecutor(max_workers=workers) as pool:
             results = list(pool.map(run_one, param_grid))
-    finally:
-        train.unpersist()
-        valid_truth.unpersist()
     return sorted(
         results, key=lambda r: r.metrics[f"recall_at_{k}"], reverse=True
     )

@@ -12,7 +12,8 @@ are fit-before-transform and train-before-evaluate. Artifacts
 driver state, no artifact tarballs (SURVEY §2.1 S12 is deliberately
 unnecessary here).
 
-A frame is cached only where more than one action consumes it, and
+A frame is cached only where more than one action consumes it, and only
+for the block that consumes it (``workloads.common.held``), so it is
 released before ``run_flow`` returns:
 
 - the filtered ``dataset``: the Categorify fit and all three splits;
@@ -148,15 +149,17 @@ def run_flow(
 ) -> FlowResult:
     """The full DAG. Returns metrics + the keyed predictions table."""
     from pyspark_recs.features.categorify import Categorify
+    from pyspark_recs.workloads.common import held
 
     cfg = cfg or FlowConfig()
     validate_config(cfg)
 
     # Consumed by the Categorify fit and by all three splits.
-    dataset = build_dataset(
-        raw_articles, raw_customers, raw_transactions, raw_images, cfg
-    ).cache()
-    try:
+    with held(
+        build_dataset(
+            raw_articles, raw_customers, raw_transactions, raw_images, cfg
+        )
+    ) as (dataset,):
         train, valid, test = time_splits(dataset, cfg)
 
         # Categorify fit on the union = the whole filtered dataset (O5
@@ -192,16 +195,13 @@ def run_flow(
         # The predictions feed both the metrics and the export, so the
         # recommendForUserSubset cross-join runs once.
         test_users = test_truth.select("user_id").distinct()
-        preds = recommend_topk(best.model, test_users, k=cfg.top_k).cache()
-        try:
+        with held(
+            recommend_topk(best.model, test_users, k=cfg.top_k)
+        ) as (preds,):
             test_metrics = ranking_metrics(preds, test_truth, k=cfg.top_k)
             keyed = predictions_table(preds, k=cfg.top_k)
             if export_path:
                 kv_export_parquet(keyed, export_path)
-        finally:
-            preds.unpersist()
-    finally:
-        dataset.unpersist()
 
     return FlowResult(
         best_params=best.params,

@@ -103,58 +103,6 @@ def streaming_static_anti_join(
     return stream.join(static_keys, on, "left_anti")
 
 
-def streaming_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    horizon: str = "1 hour",
-    horizon_us: int = 3600 * 1_000_000,
-    watermark: str = "3650 days",
-) -> DataFrame:
-    """Watermarked STREAM-STREAM inner interval join — the §2.9
-    surface where BOTH sides keep state: every left row within the
-    watermark waits for future right matches and vice versa (Spark
-    buffers each side in its own state store, keyed by ``key``).
-    Semantics: rows pair when they share ``key`` and the right event
-    time falls in ``[left_ts, left_ts + horizon]``.
-
-    The range condition is applied TWICE, deliberately:
-
-    - on the raw timestamp columns (what Spark's state-cleanup
-      analysis reads — with a production-tight watermark this bounds
-      each side's buffer to watermark + horizon);
-    - on integer MICROSECONDS (``unix_micros``), the boundary rule an
-      engine-agnostic oracle can reproduce exactly (nanos sources
-      truncate to micros identically in Spark's reader and DuckDB's
-      ``epoch_us``).
-
-    On a micros-precision stream the two predicates are identical, so
-    the duplication costs nothing and pins the boundary.
-
-    ``left_ts`` / ``right_ts`` (and every non-``key`` column) must be
-    DISTINCT names across the two inputs — rename before calling, as
-    any self-join must.
-
-    Scale: state is per-key rows within watermark + horizon on each
-    side; the join shuffles both streams on ``key`` once (the same
-    hash partitioning feeds the state stores), and emitted pairs are
-    exactly-once per (left, right) match — append-mode safe.
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    lts, rts = F.col(left_ts), F.col(right_ts)
-    cond = (
-        (lw[key] == rw[key])
-        & (rts >= lts)
-        & (rts <= lts + F.expr(f"INTERVAL {horizon}"))
-        & (F.unix_micros(rts) >= F.unix_micros(lts))
-        & (F.unix_micros(rts) <= F.unix_micros(lts) + F.lit(horizon_us))
-    )
-    return lw.join(rw, cond, "inner").drop(rw[key])
-
-
 def streaming_dedup(
     events: DataFrame,
     keys: list[str],
@@ -665,17 +613,16 @@ def streaming_quarantine(
     replays prune."""
     valid = F.get_json_object(F.col(payload_col), "$").isNotNull()
 
+    from pyspark_recs.workloads.common import held
+
     def _route(batch_df: DataFrame, batch_id: int) -> None:
-        flagged = batch_df.withColumn("_valid", valid).persist()
-        try:
+        with held(batch_df.withColumn("_valid", valid)) as (flagged,):
             flagged.filter(F.col("_valid")).drop("_valid").write.mode(
                 "append"
             ).parquet(good_path)
             flagged.filter(~F.col("_valid")).drop("_valid").write.mode(
                 "append"
             ).parquet(dead_path)
-        finally:
-            flagged.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(_route)
@@ -1365,16 +1312,26 @@ def streaming_corpus_admission(
     stored once and the left-join gate cannot fan out batch rows.
     """
     import os
+    from contextlib import ExitStack
 
     from pyspark.sql import functions as F
 
     from pyspark_recs.llmops.dedup import shingle_hashes
     from pyspark_recs.llmops.scrub import novelty_gate
     from pyspark_recs.llmops.textstats import tokens
+    from pyspark_recs.workloads.common import (
+        held,
+        release_snapshot,
+        snapshot_plan,
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        with ExitStack() as scope:
+            (batch,) = scope.enter_context(held(batch_df))
+            _admit(batch, batch_id, scope)
+
+    def _admit(batch_df: DataFrame, batch_id: int, scope: ExitStack) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.cache()
         long_enough = F.size(tokens(F.col("text"))) >= shingle_n
         if os.path.exists(index_dir):
             # Snapshot of every PRIOR batch's grams. Excluding the
@@ -1421,7 +1378,9 @@ def streaming_corpus_admission(
         # appended and re-gate the batch against itself (a real
         # read-your-own-write bug caught by the two-batch test — cache()
         # alone does not guarantee the second action hits the cache).
-        admitted = batch_df.join(gated, "doc_id", "left_semi").localCheckpoint()
+        # Both snapshots are released when the batch ends.
+        admitted = snapshot_plan(batch_df.join(gated, "doc_id", "left_semi"))
+        scope.callback(release_snapshot, admitted)
         admitted_grams = (
             admitted.select(
                 F.explode(shingle_hashes(F.col("text"), shingle_n)).alias(
@@ -1438,7 +1397,8 @@ def streaming_corpus_admission(
         # Checkpoint before writing: the novel-gram plan reads
         # index_dir, and Spark refuses to overwrite a path a plan is
         # reading from.
-        admitted_grams = admitted_grams.localCheckpoint()
+        admitted_grams = snapshot_plan(admitted_grams)
+        scope.callback(release_snapshot, admitted_grams)
         (
             admitted_grams.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -1453,7 +1413,6 @@ def streaming_corpus_admission(
             .partitionBy("batch_id")
             .parquet(corpus_dir)
         )
-        batch_df.unpersist()
 
     return process
 

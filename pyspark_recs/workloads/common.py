@@ -33,10 +33,12 @@ which makes golden-file testing of pipelines possible at all.
 from __future__ import annotations
 
 import atexit as _atexit
+import contextlib as _contextlib
 import itertools as _itertools
 import os as _os
 import shutil as _shutil
 import tempfile as _tempfile
+import weakref as _weakref
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -332,20 +334,26 @@ def artifact_plan(spark, sf: str, key: str, version: str, builder):
     return shared_plan(spark, sf, stem, load_or_build)
 
 
-def register_persisted(spark, ids) -> None:
+def register_persisted(spark, ids):
     """Register persisted RDDs, by id, for session teardown, so
     ``unpersist_shared`` releases them. This is for RDD-level storage
     that no DataFrame can unpersist: MLlib's ALS factor RDDs and
     BinaryClassificationMetrics intermediates, and the localCheckpoint
-    blocks behind a :func:`snapshot_plan` or an iterative operator's
-    final round. A frame an operator materializes for its caller is a
-    ``snapshot_plan``, never a registered ``.cache()``."""
+    blocks behind a :func:`snapshot_plan`. A frame an operator
+    materializes for its caller is a ``snapshot_plan``, never a
+    registered ``.cache()``. Returns the teardown key (None when
+    ``ids`` is empty)."""
     ids = set(ids)
-    if ids:
-        handle = _PersistedRddHandle(spark, ids)
-        ck = (spark.sparkContext.applicationId, "", f"__persisted_{id(handle)}")
-        with _REGISTRY_LOCK:
-            _SHARED[ck] = handle
+    if not ids:
+        return None
+    ck = (
+        spark.sparkContext.applicationId,
+        "",
+        f"__persisted_{next(_SNAPSHOT_SEQ)}",
+    )
+    with _REGISTRY_LOCK:
+        _SHARED[ck] = _PersistedRddHandle(spark, ids)
+    return ck
 
 
 def persistent_rdd_snapshot(spark) -> list:
@@ -366,26 +374,23 @@ def persistent_rdd_snapshot(spark) -> list:
 
 
 def release_persisted_ids(spark, ids) -> int:
-    """Unpersist the persisted RDDs with exactly these ids. Used by
-    iterative operators to drop SUPERSEDED localCheckpoint rounds while
-    the live one keeps serving, and at teardown for the ids passed to
+    """Unpersist the persisted RDDs with exactly these ids, looking each
+    one up (a constant number of py4j calls per id, however many other
+    RDDs are persisted). Used at teardown for the ids passed to
     :func:`register_persisted` (MLlib factor RDDs, checkpoints) that
-    ``DataFrame.unpersist`` cannot reach."""
-    ids = set(ids)
-    if not ids:
-        return 0
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if int(t._1()) in ids:
-            rdds.append(t._2())
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
-    return len(rdds)
+    ``DataFrame.unpersist`` cannot reach. Returns how many were
+    released."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    n = 0
+    for i in set(ids):
+        found = rdds.get(i)
+        if found.isDefined():
+            try:
+                found.get().unpersist(False)
+                n += 1
+            except Exception:
+                pass
+    return n
 
 
 class _PersistedRddHandle:
@@ -411,6 +416,9 @@ def persisted_ids(spark) -> set:
 
 
 _SNAPSHOT_SEQ = _itertools.count()
+# snapshot frame -> its teardown key in _SHARED (localCheckpoint mode)
+# or its scratch directory (parquet mode), for release_snapshot.
+_SNAPSHOTS: _weakref.WeakKeyDictionary = _weakref.WeakKeyDictionary()
 
 
 def snapshot_plan(df):
@@ -421,6 +429,9 @@ def snapshot_plan(df):
     an operator that materializes a frame it returns, or one its
     returned plan reads, uses it instead of a registered ``.cache()``,
     which the CacheManager would serve to the next identical build.
+    Iterative operators snapshot each round and hand the superseded
+    round to :func:`release_snapshot`; the last round is the frame they
+    return.
 
     This is the optimization-guide §3.3 move ("materialising an
     intermediate result truncates the plan") applied to helpers whose
@@ -434,9 +445,9 @@ def snapshot_plan(df):
 
     Non-goal (by default): fault tolerance. localCheckpoint blocks are
     not recomputable; a lost executor fails the query (the documented
-    trade, same as lloyd_kmeans_fixed's round snapshots). Callers pass
-    pre-aggregated or narrowly-projected frames, so the materialized
-    bytes stay small relative to the upstream they replace.
+    trade). Callers pass pre-aggregated or narrowly-projected frames,
+    so the materialized bytes stay small relative to the upstream they
+    replace.
 
     ``$SPARK_GRAFT_SNAPSHOT=parquet`` (VERDICT r12 #4) switches EVERY
     snapshot_plan call site at once from executor-memory blocks to a
@@ -455,11 +466,45 @@ def snapshot_plan(df):
             _snapshot_scratch_root(), f"snap_{next(_SNAPSHOT_SEQ)}"
         )
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        snap = spark.read.parquet(path)
+        _SNAPSHOTS[snap] = path
+        return snap
     before = persisted_ids(spark)
     snap = df.localCheckpoint(eager=True)
-    register_persisted(spark, persisted_ids(spark) - before)
+    _SNAPSHOTS[snap] = register_persisted(spark, persisted_ids(spark) - before)
     return snap
+
+
+def release_snapshot(df) -> None:
+    """Release one :func:`snapshot_plan` frame's storage now instead of
+    at session teardown: its localCheckpoint blocks, or in parquet mode
+    its scratch directory. For iterative operators, once the next
+    round's snapshot has materialized from it. Any other frame (a
+    round-0 input that was never snapshotted) is left alone."""
+    handle = _SNAPSHOTS.pop(df, None)
+    if isinstance(handle, str):
+        _shutil.rmtree(handle, ignore_errors=True)
+        return
+    with _REGISTRY_LOCK:
+        entry = _SHARED.pop(handle, None)
+    if entry is not None:
+        entry.unpersist()
+
+
+@_contextlib.contextmanager
+def held(*dfs):
+    """Cache ``dfs`` for the duration of a ``with`` block and unpersist
+    them when it exits, however it exits; yields the cached frames as a
+    tuple. This is the function-scoped primitive: a frame that several
+    actions inside one function consume, and that nothing the function
+    returns reads. Lazy — the first action fills the cache; a caller
+    that needs the blocks filled up front calls ``count()`` itself."""
+    cached = tuple(df.cache() for df in dfs)
+    try:
+        yield cached
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 _SNAPSHOT_SCRATCH: list = []
@@ -489,17 +534,9 @@ def release_all_persistent(spark) -> int:
     — the lint's between-queries isolation step (a leak from query A
     must not be attributed to query B). Returns how many RDDs were
     force-unpersisted."""
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        rdds.append(it.next()._2())
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
+    n = release_persisted_ids(spark, persisted_ids(spark))
     spark.catalog.clearCache()
-    return len(rdds)
+    return n
 
 
 def unpersist_shared(spark=None) -> int:

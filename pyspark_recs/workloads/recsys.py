@@ -3824,9 +3824,9 @@ def rs35_kcore_trace(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale: per round, two map-side-combined degree aggregations and
     two left-semi joins (shuffles keyed on user and item — the
-    natural partitionings); state is the edge list, cached and
-    materialized per round with the previous round released (the
-    pagerank/khop lineage discipline). Rounds are few by construction
+    natural partitionings); state is the edge list, snapshotted per
+    round with the previous round released (the khop/connected-
+    components lineage discipline). Rounds are few by construction
     (each non-final round removes ≥ 1 node).
     """
     def build() -> DataFrame:
@@ -3837,8 +3837,9 @@ def rs35_kcore_trace(spark: SparkSession, sf: str) -> DataFrame:
 
 def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark_recs.workloads.common import (
-        persisted_ids,
-        release_persisted_ids,
+        held,
+        release_snapshot,
+        snapshot_plan,
     )
 
     k = 20
@@ -3848,69 +3849,63 @@ def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     edges = _shared_interactions(spark, sf).select(
         F.col("user_id").alias("u"), F.col("item_id").alias("i")
     )
-    # Taken after the shared entry resolves, so the diff below holds
-    # only what this build persists.
-    ckpt_before = persisted_ids(spark)
     rows = []
     # Each round's survivors reference the previous round THREE times
     # (edge list + both degree tables), so a lazy lineage grows 3^r —
     # by round 6 the optimizer itself is the bottleneck (and the plan
-    # string OOMs). localCheckpoint truncates the logical plan to the
-    # materialized RDD every round: plans stay round-local and
-    # constant-size, the iterative-graph discipline one step past
-    # pagerank's cache cadence.
-    cur = edges.localCheckpoint()
+    # string OOMs). Snapshotting every round truncates the logical plan
+    # to the materialized rows: plans stay round-local and
+    # constant-size, and the superseded round is released as soon as
+    # the next one has materialized from it.
+    cur = snapshot_plan(edges)
     prev_edges = None
     for r in range(6):
         # ONE degree table per side serves both the round's stats
         # (n_edges = Σ deg, n_users = |table|) and the peel filter —
         # no COUNT(DISTINCT) expand over the edge list, and the
         # node-sized aggregates are the only driver actions per round.
-        ud = cur.groupBy("u").count().cache()
-        idf = cur.groupBy("i").count().cache()
-        us = ud.agg(
-            F.sum("count").alias("n_edges"), F.count(F.lit(1)).alias("n")
-        ).first()
-        n_items = idf.count()
-        # sum() over an empty edge set is NULL — the oracle's count(*)
-        # is 0, so coalesce (a 20-core CAN be empty: k=30 empties this
-        # very graph).
-        n_edges = us.n_edges or 0
-        rows.append((r, n_edges, us.n, n_items))
-        if n_edges == prev_edges:
-            # fixed point: peeling a k-core returns itself, so the
-            # remaining trace rows are copies — stop issuing jobs.
-            rows.extend(
-                (rr, n_edges, us.n, n_items) for rr in range(r + 1, 6)
-            )
-            ud.unpersist()
-            idf.unpersist()
-            break
-        prev_edges = n_edges
-        if r < 5:
-            cur = (
-                cur.join(
-                    F.broadcast(ud.filter(F.col("count") >= k).select("u")),
-                    "u",
-                    "left_semi",
+        with held(
+            cur.groupBy("u").count(), cur.groupBy("i").count()
+        ) as (ud, idf):
+            us = ud.agg(
+                F.sum("count").alias("n_edges"),
+                F.count(F.lit(1)).alias("n"),
+            ).first()
+            n_items = idf.count()
+            # sum() over an empty edge set is NULL — the oracle's
+            # count(*) is 0, so coalesce (a 20-core CAN be empty: k=30
+            # empties this very graph).
+            n_edges = us.n_edges or 0
+            rows.append((r, n_edges, us.n, n_items))
+            if n_edges == prev_edges:
+                # fixed point: peeling a k-core returns itself, so the
+                # remaining trace rows are copies — stop issuing jobs.
+                rows.extend(
+                    (rr, n_edges, us.n, n_items) for rr in range(r + 1, 6)
                 )
-                .join(
-                    F.broadcast(
-                        idf.filter(F.col("count") >= k).select("i")
-                    ),
-                    "i",
-                    "left_semi",
+                break
+            prev_edges = n_edges
+            if r < 5:
+                peeled = snapshot_plan(
+                    cur.join(
+                        F.broadcast(
+                            ud.filter(F.col("count") >= k).select("u")
+                        ),
+                        "u",
+                        "left_semi",
+                    ).join(
+                        F.broadcast(
+                            idf.filter(F.col("count") >= k).select("i")
+                        ),
+                        "i",
+                        "left_semi",
+                    )
                 )
-                .localCheckpoint()  # eager: materializes before ud/idf drop
-            )
-        ud.unpersist()
-        idf.unpersist()
+                release_snapshot(cur)
+                cur = peeled
     # Every round's stats are already collected into `rows` (the result
-    # is a LITERAL frame), so the per-round localCheckpoint blocks are
-    # dead weight — release the ones THIS build created (id-diff keeps
-    # any concurrent operator's live checkpoints untouched; the r89
-    # cache-lint class, localCheckpoint flavor).
-    release_persisted_ids(spark, persisted_ids(spark) - ckpt_before)
+    # is a LITERAL frame), so the last round's snapshot is dead weight.
+    release_snapshot(cur)
     return spark.createDataFrame(
         rows, "round long, n_edges long, n_users long, n_items long"
     )

@@ -1553,17 +1553,19 @@ def s23_streaming_stream_join_exec(spark: SparkSession, sf: str) -> DataFrame:
     comparisons, and the pair set exactly (a set, so no order or
     batch-split sensitivity; the file sink is exactly-once per match).
 
-    Boundary exactness: the join compares integer MICROSECONDS on
-    both engines (`streaming_stream_join`'s doubled predicate) — the
-    staged parquet is micros, DuckDB's `epoch_us` truncates the nanos
-    source identically, so a pair landing exactly on the horizon
-    agrees engine-to-engine.
+    Boundary exactness: `streaming_stream_join` compares the two
+    timestamp columns, and the staged parquet is micros-precision, so
+    Spark's comparison is an exact integer-microsecond one — the same
+    rule as the oracle's `epoch_us`, which truncates the nanos source
+    identically, so a pair landing exactly on the horizon agrees
+    engine-to-engine.
 
     Scale: both sides shuffle once on user_id into their state
-    stores; state is per-user rows within watermark + horizon per
-    side (the backfill watermark keeps everything, a production
-    deployment's tight watermark bounds it by delivery delay + 1 h);
-    emitted pairs stream straight to the executor-side sink.
+    stores; state is per-user rows within the 2-hour watermark + the
+    1-hour window per side. The availableNow trigger reads the whole
+    staged dir as one micro-batch, so the watermark drops nothing
+    here; in a live deployment it bounds state by delivery delay.
+    Emitted pairs stream straight to the executor-side sink.
     """
     from pyspark_recs.streaming import (
         read_event_stream,

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 import pytest
@@ -652,8 +653,8 @@ def test_rs17_terciles_no_single_partition_window(spark):
 # wide bounded-window lint (VERDICT r9 #2). Every unpartitioned window in
 # every registry plan must sit above a node that PROVABLY bounds the rows
 # reaching it: a limit (TakeOrderedAndProject / GlobalLimit /
-# CollectLimit), a literal relation (LocalTableScan / a ≤cluster-width
-# Scan ExistingRDD), or an aggregate that is global (no keys) or keyed by
+# CollectLimit), a literal relation (LocalTableScan), or an aggregate
+# that is global (no keys) or keyed by
 # the spark_partition_id column `_pid` (cardinality ≤ cluster
 # parallelism — the scalable_prefix_* offset tables). Anything else is
 # the serializes-the-world global window and fails CI.
@@ -709,10 +710,6 @@ def _node_bounds_rows(name: str, detail: str, names, edges, details) -> bool:
     if re.match(
         r"TakeOrderedAndProject|GlobalLimit|CollectLimit|LocalTableScan", name
     ):
-        return True
-    if name.startswith("Scan ExistingRDD"):
-        # createDataFrame literals — in this repo only the ≤32-row
-        # partition-offset tables and few-row merge tables reach here.
         return True
     if re.match(r"(Hash|Sort|ObjectHash)Aggregate", name):
         km = re.search(r"^Keys(?: \[\d+\])?: \[([^\]]*)\]", detail, re.M)
@@ -876,6 +873,7 @@ def test_persisted_ids_matches_the_rdd_walk(spark):
         persisted_ids,
         persistent_rdd_snapshot,
         release_all_persistent,
+        release_persisted_ids,
     )
 
     frames = [spark.range(10 * i).persist() for i in range(1, 4)]
@@ -885,6 +883,11 @@ def test_persisted_ids_matches_the_rdd_walk(spark):
     walked = {i for i, _ in persistent_rdd_snapshot(spark)}
     assert len(walked) >= 4
     assert persisted_ids(spark) == walked
+    # release_persisted_ids looks each id up: exactly that subset goes
+    # (an id that is not persisted is skipped, not an error).
+    subset = set(sorted(walked)[:2])
+    assert release_persisted_ids(spark, subset | {-1}) == len(subset)
+    assert persisted_ids(spark) == walked - subset
     release_all_persistent(spark)
     assert persisted_ids(spark) == set()
 
@@ -904,6 +907,16 @@ def test_window_lint_flags_a_genuinely_global_window(spark):
         "rk", F.row_number().over(Window.orderBy("o_orderkey"))
     )
     assert not _unbounded_global_windows(plan_of(good))
+    # A snapshot's scan (Scan ExistingRDD) bounds nothing: the same
+    # window over snapshot_plan(orders) must be flagged too.
+    from pyspark_recs.workloads.common import release_snapshot, snapshot_plan
+
+    snap = snapshot_plan(df)
+    over_snap = snap.withColumn(
+        "rk", F.row_number().over(Window.orderBy("o_orderkey"))
+    )
+    assert _unbounded_global_windows(plan_of(over_snap)), plan_of(over_snap)
+    release_snapshot(snap)
 
 
 def test_l95_url_dedup_is_single_shuffle_pure_jvm(spark):
@@ -950,3 +963,54 @@ def test_snapshot_plan_parquet_mode(spark, monkeypatch, tmp_path):
     assert created
     C.unpersist_shared(spark)
     assert C.persisted_ids(spark) == before_ids
+
+
+def test_release_snapshot_frees_one_snapshot_before_teardown(
+    spark, monkeypatch, tmp_path
+):
+    # Iterative operators release each superseded round: release_snapshot
+    # drops exactly that snapshot's blocks (another snapshot keeps
+    # serving), deletes a parquet-mode snapshot's scratch directory, and
+    # leaves a frame that was never snapshotted alone.
+    from pyspark_recs.workloads import common as C
+
+    base = spark.range(50).selectExpr("id", "id % 3 AS k")
+    before = C.persisted_ids(spark)
+    first = C.snapshot_plan(base)
+    first_ids = C.persisted_ids(spark) - before
+    second = C.snapshot_plan(base.filter("k = 0"))
+    assert first_ids and C.persisted_ids(spark) - before > first_ids
+    C.release_snapshot(first)
+    C.release_snapshot(base)  # not a snapshot: a no-op
+    assert not (C.persisted_ids(spark) & first_ids)
+    assert second.count() == 17
+    C.release_snapshot(second)
+    assert C.persisted_ids(spark) == before
+
+    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT", "parquet")
+    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT_DIR", str(tmp_path))
+    monkeypatch.setattr(C, "_SNAPSHOT_SCRATCH", [])
+    snap = C.snapshot_plan(base)
+    scratch = C._SNAPSHOT_SCRATCH[0]
+    assert len(os.listdir(scratch)) == 1
+    C.release_snapshot(snap)
+    assert os.listdir(scratch) == []
+
+
+def test_held_caches_only_inside_its_block(spark):
+    # held() is lazy (nothing is materialized on entry) and releases its
+    # frames however the block exits.
+    from pyspark_recs.workloads.common import held, unpersist_shared
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    unpersist_shared(spark)
+    assert cache_manager.isEmpty()
+    a = spark.range(10).selectExpr("id * 3 AS x")
+    b = spark.range(10).selectExpr("id * 5 AS y")
+    with pytest.raises(RuntimeError):
+        with held(a, b) as (ha, hb):
+            assert (ha, hb) == (a, b)
+            assert not cache_manager.isEmpty()
+            assert ha.storageLevel.useMemory
+            raise RuntimeError("block failed")
+    assert cache_manager.isEmpty()

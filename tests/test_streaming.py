@@ -924,6 +924,39 @@ def test_corpus_admission_index_stays_a_set(spark, tmp_path):
     assert admitted == {1, 2, 3}
 
 
+def test_corpus_admission_releases_each_batch(spark, tmp_path):
+    """Each batch's cache and its two snapshots are released before
+    ``process`` returns: three batches leave the persisted RDDs and the
+    CacheManager exactly as they found them."""
+    from pyspark_recs.streaming import streaming_corpus_admission
+    from pyspark_recs.workloads.common import persisted_ids, unpersist_shared
+
+    schema = "doc_id long, text string"
+    process = streaming_corpus_admission(
+        str(tmp_path / "idx"), str(tmp_path / "corp")
+    )
+    batches = [
+        spark.createDataFrame([(i, text)], schema)
+        for i, text in enumerate(
+            [
+                "the quick brown fox jumps over the lazy dog",
+                "completely different content about spark shuffles",
+                "yet another unrelated document describing parquet footers",
+            ]
+        )
+    ]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    unpersist_shared(spark)
+    assert cache_manager.isEmpty()
+    before = persisted_ids(spark)
+    for batch_id, batch in enumerate(batches):
+        process(batch, batch_id)
+    assert persisted_ids(spark) == before
+    assert cache_manager.isEmpty()
+    corpus = spark.read.parquet(str(tmp_path / "corp"))
+    assert {r.doc_id for r in corpus.collect()} == {0, 1, 2}
+
+
 def test_corpus_admission_replay_is_idempotent(spark, tmp_path):
     """A foreachBatch retry (same batch_id) must leave the corpus and
     index exactly as the first attempt did — the batch's documents are

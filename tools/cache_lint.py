@@ -8,7 +8,9 @@ through the bench's checksum driver, then check two things.
    build would be served from this run's blocks (the rs11 class). A
    frame an operator materializes for its caller must be a
    ``workloads.common.snapshot_plan`` (a localCheckpoint the
-   CacheManager never matches), or be unpersisted before it returns.
+   CacheManager never matches); a cache used only inside one function
+   is a ``workloads.common.held`` block, released when the block
+   exits.
 2. Leaked RDDs. After ``unpersist_shared``, zero persisted RDDs may
    remain in the JVM (the round-9 r89 leak, caught by review only):
    RDD-level storage an operator keeps must be registered by id with
