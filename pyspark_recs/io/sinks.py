@@ -71,23 +71,17 @@ def kv_export_parquet(predictions: DataFrame, path: str) -> None:
 
 def point_lookup(spark: SparkSession, path: str, user_id: str) -> list:
     """Serving GET semantics (S9, serverless/handler.py:38-73): missing
-    user → the sentinel's empty list; predicate-pushdown point query."""
-    rows = (
+    user → the ``no_user`` sentinel's recs, or an empty list when the
+    table holds no sentinel. One predicate-pushdown scan reads both
+    keys, so a miss costs the same jobs as a hit."""
+    found = dict(
         spark.read.parquet(path)
-        .filter(F.col("userId") == F.lit(user_id))
-        .select("recs")
-        .limit(1)
+        .filter(F.col("userId").isin(user_id, "no_user"))
+        .select("userId", "recs")
         .collect()
     )
-    if not rows:
-        rows = (
-            spark.read.parquet(path)
-            .filter(F.col("userId") == F.lit("no_user"))
-            .select("recs")
-            .limit(1)
-            .collect()
-        )
-    return json.loads(rows[0].recs) if rows else []
+    recs = found.get(user_id, found.get("no_user"))
+    return json.loads(recs) if recs is not None else []
 
 
 def write_date_partitioned(

@@ -80,6 +80,10 @@ def validate_config(cfg: FlowConfig) -> None:
         raise ValueError("validation_end_date must be after training_end_date")
     if not 0.0 <= cfg.sample_fraction <= 1.0:
         raise ValueError("sample_fraction must be in [0, 1]")
+    if not cfg.param_grid:
+        raise ValueError("param_grid must hold at least one config")
+    if cfg.top_k < 1:
+        raise ValueError("top_k must be at least 1")
 
 
 def build_dataset(

@@ -2,44 +2,32 @@
 over the driver testdata, each with a DuckDB oracle-SQL twin.
 
 ``QUERIES[name](spark, sf_dir) -> DataFrame`` and ``ORACLE[name] -> str``
-feed /root/repo/__spark_entry__.py (the driver correctness contract).
+feed ``__spark_entry__.py`` (the driver correctness contract).
 
 Ordering matters: the driver's correctness gate checks a bounded prefix
-of the registry (~50 entries per round), so the registry ROTATES each
-round so every query's driver row stays at most a couple of rounds old:
-(1) queries added or semantically/plan-wise changed this round,
-(2) red/never-verified entries, (3) the oldest driver-verified entries
-first (drift watch — the round-2 NTZ regression proved drift is real).
-The order is DERIVED from CORRECTNESS_r*.json history by
-tools/derive_priority.py into workloads/priority.py (only the
-changed-this-round list is hand-declared); tests/test_priority.py pins
-the committed order to the derivation.
+of the registry (~50 entries per round). The order is computed at
+import by ``priority.rotation`` from the ``CORRECTNESS_r*.json`` files
+in the repo root: red rows first, then never-checked queries, then the
+oldest driver-verified entries (drift watch). Each round's file pushes
+the queries it checked to the back, so the prefix rotates by itself.
 """
+
+from pathlib import Path
 
 from pyspark_recs.workloads import llmops as _llmops
 from pyspark_recs.workloads import recsys as _recsys
 from pyspark_recs.workloads import relational as _relational
 from pyspark_recs.workloads import streaming as _streaming
+from pyspark_recs.workloads.priority import rotation
 
-_ALL_QUERIES = {}
-_ALL_ORACLE = {}
+_queries = {}
+_oracle = {}
 for _mod in (_relational, _llmops, _recsys, _streaming):
-    _ALL_QUERIES.update(_mod.QUERIES)
-    _ALL_ORACLE.update(getattr(_mod, "ORACLE", {}))
+    _queries.update(_mod.QUERIES)
+    _oracle.update(getattr(_mod, "ORACLE", {}))
 
-from pyspark_recs.workloads.priority import PRIORITY as _PRIORITY  # noqa: E402
-
-QUERIES = {}
-ORACLE = {}
-for _name in _PRIORITY:
-    if _name in _ALL_QUERIES:  # forward slots for queries added later this round
-        QUERIES[_name] = _ALL_QUERIES[_name]
-        if _name in _ALL_ORACLE:
-            ORACLE[_name] = _ALL_ORACLE[_name]
-for _name, _fn in _ALL_QUERIES.items():
-    if _name not in QUERIES:
-        QUERIES[_name] = _fn
-        if _name in _ALL_ORACLE:
-            ORACLE[_name] = _ALL_ORACLE[_name]
+_REPO = Path(__file__).resolve().parents[2]
+QUERIES = {n: _queries[n] for n in rotation(list(_queries), _REPO)}
+ORACLE = {n: _oracle[n] for n in QUERIES if n in _oracle}
 
 __all__ = ["QUERIES", "ORACLE"]

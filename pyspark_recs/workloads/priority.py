@@ -1,296 +1,42 @@
-"""Driver-prefix rotation order.
+"""The driver's correctness rotation, derived from CORRECTNESS_r*.json.
 
-``PRIORITY`` is GENERATED by ``tools/derive_priority.py`` from the
-committed CORRECTNESS_r*.json history — do not hand-edit it; rerun the
-tool. ``tests/test_priority.py`` pins the committed list to the
-derivation, so a stale list fails CI instead of silently aging
-(the round-6..8 failure mode this replaces).
-
-``CHANGED_THIS_ROUND`` is the one hand-maintained input: queries whose
-code or plan changed SINCE their newest driver row (semantic-change
-detection needs human judgment). Update it as you change queries during
-a round, then rerun the tool; reset it when the new CORRECTNESS file
-lands at round close and bump ``DERIVED_FROM_ROUNDS``.
+The driver checks a bounded prefix of the registry each round and writes
+one ``CORRECTNESS_r<N>.json`` per round (query name -> result row, in
+the order it checked them). ``rotation`` orders the registry from every
+such file present, so a new file moves the prefix at the next import
+with no manual step.
 """
 
-# Round 12: three NEW rows (the corpus→tokenizer handoff l101, the
-# multi-micro-batch state-carry row s22, the stream-stream interval
-# join s23); s19/s21 re-sunk
-# executor-side (parquet/foreachBatch, VERDICT r11 #1) and s20's
-# read-back gained KV upsert semantics; rs39's batch ids became
-# shared constants (bracket can't drift from the staging filter);
-# s18's checkpoint now rides the GC'd tmpdir helper; l85's
-# checkpoint release is scoped by snapshot diff (ADVICE r11).
-CHANGED_THIS_ROUND = [
-    "s23_streaming_stream_join_exec",
-    "l101_corpus_to_tokenizer",
-    "s22_streaming_multibatch_exec",
-    "s19_streaming_dedup_exec",
-    "s21_streaming_sessionize_exec",
-    "s20_streaming_kv_sink_exec",
-    "s18_streaming_hopping_exec",
-    "rs39_e2e_pipeline",
-    "l85_kmeans_train",
-]
+from __future__ import annotations
 
-# Newest CORRECTNESS round folded into PRIORITY (new files landing
-# AFTER generation don't invalidate the committed list; the next
-# regeneration bumps this).
-DERIVED_FROM_ROUNDS = 11
+import json
+import re
+from pathlib import Path
 
-PRIORITY = [
-    "s23_streaming_stream_join_exec",
-    "l101_corpus_to_tokenizer",
-    "s22_streaming_multibatch_exec",
-    "s19_streaming_dedup_exec",
-    "s21_streaming_sessionize_exec",
-    "s20_streaming_kv_sink_exec",
-    "s18_streaming_hopping_exec",
-    "rs39_e2e_pipeline",
-    "l85_kmeans_train",
-    "r07_json_extract",
-    "r08_url_synthesis",
-    "r09_left_join_defaults",
-    "r10_three_way_join",
-    "r11_per_part_avg_price",
-    "r12_time_split",
-    "r13_date_parts",
-    "r14_topk_per_customer",
-    "r15_latest_event",
-    "r16_union_splits",
-    "r17_distinct_values",
-    "r18_argmax_per_nation",
-    "l74_two_tower_align",
-    "l75_mixture_sample",
-    "r56_set_ops",
-    "rs14_retention_cohorts",
-    "s02_sessionize",
-    "l42_matryoshka_energy",
-    "r47_salted_join",
-    "s04_user_gap_stats",
-    "l31_pii_redaction",
-    "r48_range_join",
-    "l34_boilerplate_grams",
-    "r49_grouped_ols",
-    "l35_novelty_gate",
-    "r50_quantile_bounds",
-    "l32_decontaminate",
-    "l33_bm25_search",
-    "r58_ewma_smoothing",
-    "l43_semantic_dedup",
-    "r59_gap_fill",
-    "l44_embedding_covariance",
-    "r60_ks_drift",
-    "l45_hamming_neardup",
-    "r61_seasonal_anomaly",
-    "l46_jl_projection",
-    "l47_token_concentration",
-    "l13_multimodal_features",
-    "l25_scalar_quantize",
-    "l48_segment_dedup",
-    "r62_chisq_independence",
-    "l49_pq_encode",
-    "r63_snapshot_diff",
-    "r64_disjunctive_pushdown",
-    "r65_table_profile",
-    "l50_hybrid_search",
-    "l51_minhash_jaccard_audit",
-    "l52_weighted_sample",
-    "r66_trimmed_mean",
-    "s13_late_arrival_audit",
-    "r67_min_cost_supplier",
-    "r68_big_spender_orders",
-    "l53_weighted_reservoir",
-    "s14_utouch_attribution",
-    "rs32_joint_feature_eval",
-    "l76_png_decode_stats",
-    "r69_mann_whitney",
-    "l54_countmin_sketch",
-    "l55_containment_pairs",
-    "r70_bitmap_distinct",
-    "r71_rolling_distinct",
-    "l56_linear_model_score",
-    "r72_sql_model_chain",
-    "r73_delete_propagation",
-    "r74_fk_discovery",
-    "l57_source_leakage",
-    "r21_bucketize",
-    "r22_zscore",
-    "r23_explode_tokens",
-    "r24_fill_missing_normalize",
-    "r25_count_distinct",
-    "r26_ordered_export",
-    "r28_hash_sample",
-    "r30_interval_join",
-    "r31_pivot",
-    "r32_rollup",
-    "r33_unpivot",
-    "r35_trailing_window",
-    "r37_incremental_rollup",
-    "r38_props_extract",
-    "r39_local_supplier_volume",
-    "r40_small_order_parts",
-    "r41_sole_late_supplier",
-    "r43_market_share",
-    "r44_custdist",
-    "l04_simhash",
-    "r01_pricing_summary",
-    "r27_approx_distinct",
-    "r29_asof_join",
-    "r34_scd2_history",
-    "r42_json_quarantine",
-    "l01_exact_dedup",
-    "l06_embedding_topk",
-    "l07_langid",
-    "l08_quality_scores",
-    "l09_token_stats",
-    "l10_char_fingerprints",
-    "l11_multimodal_decode",
-    "l14_embedding_neardup",
-    "l15_ann_ivf",
-    "l16_frame_sample",
-    "rs04_als_recommendations",
-    "rs24_cf_holdout_eval",
-    "rs27_sampled_metrics_bias",
-    "rs28_content_model_eval",
-    "rs30_ensemble_eval",
-    "l29_image_fetch_encode",
-    "l30_text_image_search",
-    "l17_resize_thumbnail",
-    "l18_tfidf_top_terms",
-    "l19_pack_sequences",
-    "l20_corpus_profile",
-    "l22_bigram_repetition",
-    "l23_gopher_rules",
-    "l24_stratified_sample",
-    "l26_source_mixture",
-    "l27_chunk_documents",
-    "l28_type_token_ratio",
-    "l02_minhash_signatures",
-    "l03_lsh_candidate_pairs",
-    "l05_ngram_jaccard",
-    "rs01_interactions",
-    "rs02_popular_items_per_segment",
-    "rs07_leave_one_out",
-    "s01_tumbling_daily",
-    "s03_keep_first_dedup",
-    "s05_session_windows",
-    "s06_stream_quarantine",
-    "l40_incremental_lsh",
-    "l61_fuzzy_decontaminate",
-    "l68_threshold_sweep",
-    "r51_grouping_sets",
-    "r52_mode_per_group",
-    "r53_sketch_rollup",
-    "r54_nation_trade",
-    "r55_mad_outliers",
-    "r75_shipping_priority",
-    "r76_late_shipment_priority",
-    "r77_returned_customers",
-    "r78_promo_revenue",
-    "r79_supplier_census",
-    "r80_master_merge",
-    "r81_time_travel",
-    "r82_subject_access_report",
-    "r84_luhn_validation",
-    "l36_fuzzy_edit_dedup",
-    "l94_cdc_chunks",
-    "l93_curriculum_shards",
-    "r90_cuped_ab_lift",
-    "l92_score_calibration",
-    "s17_holt_forecast",
-    "l90_audio_autocorr",
-    "rs33_ips_ctr_debias",
-    "l64_decontaminate_spans",
-    "s10_recursive_ewma",
-    "s12_debounce",
-    "l89_video_scene_cuts",
-    "l87_image_augment",
-    "l88_audio_zcr",
-    "l86_audio_downsample",
-    "l84_duplicate_text_spans",
-    "l83_image_phash_dedup",
-    "l80_bigram_lm_score",
-    "l81_dsir_importance",
-    "l82_audio_vad_segments",
-    "l77_jpeg_decode_stats",
-    "l78_wav_decode_stats",
-    "l79_y4m_frame_stats",
-    "l21_dedup_components",
-    "l66_attribution_union",
-    "l67_group_aware_split",
-    "rs05_item_cooccurrence",
-    "rs21_coldstart_fallback",
-    "rs26_rrf_fusion",
-    "l58_ivfpq_search",
-    "l59_token_drift",
-    "l60_vocab_coverage",
-    "l62_cluster_balanced_sample",
-    "rs25_point_in_time_features",
-    "l63_shard_manifest",
-    "l65_payload_dedup",
-    "l69_corpus_diff",
-    "rs09_next_item_pairs",
-    "s09_user_profile",
-    "rs10_funnel",
-    "s07_hopping_windows",
-    "rs11_copurchase_triangles",
-    "s08_new_user_events",
-    "rs34_candidate_recall_sweep",
-    "r36_spend_deciles",
-    "r20_categorify_encode_oov",
-    "r19_categorify_dictionary",
-    "rs17_rfm_segments",
-    "rs31_behavioral_audit",
-    "r83_skew_profile",
-    "rs36_exposure_gini",
-    "r89_trade_reach",
-    "r04_dedup_exact",
-    "r05_dedup_last_value",
-    "r06_latest_batch",
-    "l98_corpus_e2e",
-    "l99_policy_gate",
-    "l100_robots_gate",
-    "l37_heavy_hitters",
-    "l38_rare_token_score",
-    "r57_pagerank_trade",
-    "rs16_personalized_pagerank",
-    "rs35_kcore_trace",
-    "rs15_association_rules",
-    "l91_maxsim_retrieval",
-    "l95_url_canonical_dedup",
-    "l97_audio_tone_power",
-    "l96_domain_dup_stats",
-    "rs37_kv_export_table",
-    "rs38_predictions_log",
-    "rs40_serving_config_selection",
-    "l39_bpe_pair_counts",
-    "rs12_item_transitions",
-    "rs13_diversified_topk",
-    "s11_peak_concurrency",
-    "l41_winnow_fingerprints",
-    "l71_bpe_train",
-    "l72_intra_doc_repetition",
-    "l73_bpe_apply",
-    "r85_forecast_revenue_change",
-    "r86_product_type_profit",
-    "r87_top_supplier",
-    "r88_important_stock",
-    "rs29_markov_next_item_eval",
-    "l70_real_encoder_embed",
-    "l12_ann_lsh",
-    "s15_histogram_quantiles",
-    "s16_value_drift",
-    "rs22_item_lift",
-    "rs23_item_knn",
-    "rs03_user_history_topk",
-    "rs06_negative_samples",
-    "rs08_feature_rerank",
-    "rs18_decayed_covisitation",
-    "rs19_bias_baseline",
-    "rs20_rec_coverage",
-    "r45_dominant_suppliers",
-    "r46_idle_rich_customers",
-    "r02_frequent_customers",
-    "r03_frequent_customer_orders",
-]
+
+def rotation(names: list, root: Path | str) -> list:
+    """``names`` (registry source order) reordered for the driver:
+    queries whose newest driver row is red, oldest first; then queries
+    never driver-checked, in source order; then green queries by the
+    round of their newest row, oldest first, ties in that file's row
+    order."""
+    newest = {}  # name -> (round, row position, green)
+    for path in Path(root).glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        rows = json.loads(path.read_text(encoding="utf-8"))
+        for pos, (name, row) in enumerate(rows.items()):
+            if name not in newest or rnd > newest[name][0]:
+                green = bool(
+                    row.get("rows_match")
+                    and row.get("schema_match")
+                    and row.get("hash_match", True) is not False
+                    and not row.get("err")
+                )
+                newest[name] = (rnd, pos, green)
+    checked = sorted((n for n in names if n in newest), key=lambda n: newest[n][:2])
+    red = [n for n in checked if not newest[n][2]]
+    green = [n for n in checked if newest[n][2]]
+    return red + [n for n in names if n not in newest] + green

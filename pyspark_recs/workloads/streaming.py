@@ -1023,7 +1023,7 @@ _STAGED_DROPS: dict = {}
 _STREAM_TMPDIRS: list = []
 
 
-def _stream_state_partitions() -> int:
+def _stream_state_partitions(spark: SparkSession) -> int:
     """State-store partition count for the streaming-EXECUTED rows.
 
     Structured Streaming reads ``spark.sql.shuffle.partitions`` ONCE —
@@ -1038,19 +1038,11 @@ def _stream_state_partitions() -> int:
     bit-identical checksums (partition-invariance of these rows is also
     pinned by the 100× pressure table, SCALING.md).
 
-    Production sizing at 100 TB raises this to match state cardinality
-    and per-trigger throughput via $SPARK_GRAFT_STREAM_PARTITIONS; the
-    default scales with the core budget (min(cpus, 8)) so the driver's
-    lower-core bench runs keep a consistent, honest shape instead of a
-    local[32]-tuned constant.
+    The count scales with the session being configured,
+    min(defaultParallelism, 8), so lower-core runs keep a consistent
+    shape instead of a local[32]-tuned constant.
     """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
-    return max(1, min(cpus, 8))
+    return max(1, min(spark.sparkContext.defaultParallelism, 8))
 
 
 from contextlib import contextmanager as _contextmanager  # noqa: E402
@@ -1064,7 +1056,7 @@ def _stream_exec_conf(spark: SparkSession):
     run under the session's normal setting)."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(_stream_state_partitions()))
+    spark.conf.set(key, str(_stream_state_partitions(spark)))
     try:
         yield
     finally:

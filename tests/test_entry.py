@@ -66,20 +66,6 @@ def test_loader_normalizes_all_timestamps(spark):
                 )
 
 
-def test_priority_rotation_names_all_resolve():
-    # A typo in the rotation list silently drops a query's verification
-    # priority (the registry skips unknown names by design, to allow
-    # forward slots only DURING a round) — so every name must resolve
-    # by the time tests run.
-    import pyspark_recs.workloads as w
-
-    unknown = [n for n in w._PRIORITY if n not in w._ALL_QUERIES]
-    assert unknown == []
-    # and the rotation must not contain duplicates (double slots skew
-    # the bounded verification window)
-    assert len(w._PRIORITY) == len(set(w._PRIORITY))
-
-
 def test_bench_headline_names_resolve_and_unique():
     # A typo in bench.py's HEADLINE list would crash the driver's
     # per-round benchmark (KeyError mid-run) — so every name must

@@ -25,6 +25,12 @@ def test_validate_config_fail_fast():
         )
     with pytest.raises(ValueError):
         validate_config(FlowConfig(sample_fraction=1.5))
+    # before any Spark work: an empty grid used to fail only after the
+    # training matrix and validation truth were cached and counted
+    with pytest.raises(ValueError, match="param_grid"):
+        validate_config(FlowConfig(param_grid=[]))
+    with pytest.raises(ValueError, match="top_k"):
+        validate_config(FlowConfig(top_k=0))
 
 
 def test_run_flow_end_to_end(
@@ -125,6 +131,39 @@ def test_kv_export_sentinel(spark, tmp_path):
             store[item["userId"]] = item["recs"]
     assert json.loads(store["1"]) == ["10"]
     assert json.loads(store["no_user"]) == []  # serving smoke sentinel
+
+
+def _kv_table_with_sentinel(spark, tmp_path):
+    path = str(tmp_path / "kv")
+    spark.createDataFrame(
+        [("u1", json.dumps(["10", "30"])), ("no_user", json.dumps(["99"]))],
+        "userId string, recs string",
+    ).repartition(2).write.parquet(path)
+    return path
+
+
+def test_point_lookup_prefers_the_user_over_the_sentinel(spark, tmp_path):
+    path = _kv_table_with_sentinel(spark, tmp_path)
+    assert point_lookup(spark, path, "u1") == ["10", "30"]
+    assert point_lookup(spark, path, "missing-user") == ["99"]
+
+
+def test_point_lookup_miss_runs_as_many_jobs_as_a_hit(spark, tmp_path):
+    path = _kv_table_with_sentinel(spark, tmp_path)
+    sc = spark.sparkContext
+    point_lookup(spark, path, "u1")  # warm-up
+
+    def jobs(user_id, group):
+        sc.setJobGroup(group, group)
+        try:
+            point_lookup(spark, path, user_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    hit = jobs("u1", "point-lookup-hit")
+    assert hit >= 1
+    assert jobs("missing-user", "point-lookup-miss") == hit
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path):

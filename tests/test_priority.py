@@ -1,76 +1,89 @@
-"""The rotation is DERIVED, not hand-maintained (VERDICT r8 item #2):
-these pin the committed priority list to the computation over
-CORRECTNESS history, so evidence-ordering can never silently go stale
-the way the round-6..8 hand list did."""
+"""The driver's correctness rotation is computed at import from the
+CORRECTNESS_r*.json files in the repo root; these pin the registry order
+to that computation and the computation to its tiers."""
 
 from __future__ import annotations
 
-import os
-import sys
+import json
+import shutil
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark_recs.workloads import ORACLE, QUERIES
+from pyspark_recs.workloads import llmops, recsys, relational, streaming
+from pyspark_recs.workloads.priority import rotation
 
-from tools.derive_priority import derive, registry_names  # noqa: E402
-
-from pyspark_recs.workloads import QUERIES, ORACLE  # noqa: E402
-from pyspark_recs.workloads import priority as P  # noqa: E402
-
-
-def test_committed_priority_matches_derivation():
-    # Bounded at DERIVED_FROM_ROUNDS so a CORRECTNESS file landing
-    # after generation (driver writes it at round close) doesn't fail
-    # CI — the next regeneration folds it in and bumps the bound.
-    assert list(P.PRIORITY) == derive(
-        P.CHANGED_THIS_ROUND, P.DERIVED_FROM_ROUNDS
-    )
+REPO = Path(__file__).resolve().parents[1]
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+RED = {**GREEN, "hash_match": False}
 
 
-def test_priority_is_complete_and_duplicate_free():
-    names = registry_names()
-    assert len(P.PRIORITY) == len(set(P.PRIORITY))
-    assert set(P.PRIORITY) == set(names)
+def _source_order():
+    return [n for m in (relational, llmops, recsys, streaming) for n in m.QUERIES]
+
+
+def _write(root, rnd, rows):
+    path = Path(root) / f"CORRECTNESS_r{rnd:02d}.json"
+    path.write_text(json.dumps(rows), encoding="utf-8")
 
 
 def test_registry_prefix_follows_priority():
-    # The driver iterates QUERIES in insertion order; that order IS
-    # the derived priority, and every entry has its oracle twin.
-    assert list(QUERIES) == list(P.PRIORITY)
+    # The driver iterates QUERIES in insertion order; that order IS the
+    # rotation over the committed files, and every entry has its twin.
+    assert list(QUERIES) == rotation(_source_order(), REPO)
     assert set(ORACLE) == set(QUERIES)
 
 
-def test_changed_this_round_names_are_registered():
-    names = set(registry_names())
-    for n in P.CHANGED_THIS_ROUND:
-        assert n in names, n
+def test_priority_is_complete_and_duplicate_free():
+    # A name registered by two modules would shadow one query, and a
+    # double slot would skew the bounded verification window.
+    names = _source_order()
+    assert len(names) == len(set(names))
+    assert set(QUERIES) == set(names)
+    assert sorted(rotation(names, REPO)) == sorted(names)
 
 
-def test_tier_order_red_and_never_checked_first():
-    # Structural property of derive(): after the changed tier, any
-    # red-at-newest-row or never-checked query precedes every green.
-    from tools.derive_priority import history
-
-    hist = history(P.DERIVED_FROM_ROUNDS)
-    order = list(P.PRIORITY)
-    changed = set(P.CHANGED_THIS_ROUND)
-    greens_started = False
-    for n in order:
-        if n in changed:
-            continue
-        is_green = n in hist and hist[n][2]
-        if greens_started:
-            assert is_green, f"{n} (red/never) ordered after a green"
-        elif is_green:
-            greens_started = True
+def test_committed_correctness_files_name_registered_queries():
+    files = sorted(REPO.glob("CORRECTNESS_r*.json"))
+    assert files
+    for path in files:
+        rows = json.loads(path.read_text(encoding="utf-8"))
+        unknown = [n for n in rows if n not in QUERIES]
+        assert unknown == [], path.name
 
 
-def test_drift_watch_is_oldest_first():
-    from tools.derive_priority import history
+def test_tier_order_red_and_never_checked_first(tmp_path):
+    names = ["a", "b", "c", "d", "e", "f"]
+    _write(tmp_path, 1, {"b": GREEN, "e": RED, "c": GREEN})
+    _write(tmp_path, 2, {"d": RED, "c": RED, "e": GREEN})
+    # red at the newest row (oldest first), never checked (source order),
+    # then green (oldest first): an older red row does not count
+    assert rotation(names, tmp_path) == ["d", "c", "a", "f", "b", "e"]
 
-    hist = history(P.DERIVED_FROM_ROUNDS)
-    changed = set(P.CHANGED_THIS_ROUND)
-    rounds = [
-        hist[n][0]
-        for n in P.PRIORITY
-        if n not in changed and n in hist and hist[n][2]
-    ]
-    assert rounds == sorted(rounds)
+
+def test_no_files_keeps_source_order(tmp_path):
+    assert rotation(["z", "y", "x"], tmp_path) == ["z", "y", "x"]
+
+
+def test_drift_watch_is_oldest_first(tmp_path):
+    names = ["a", "b", "c", "d", "e"]
+    _write(tmp_path, 3, {"a": GREEN, "e": GREEN})
+    _write(tmp_path, 1, {"d": GREEN, "b": GREEN, "c": GREEN})
+    _write(tmp_path, 2, {"b": GREEN})
+    (tmp_path / "CORRECTNESS_r02_c8.json").write_text("not a round file")
+    # ties within a round keep that file's row order; a query's newest
+    # row is the one that counts, whatever the glob order
+    assert rotation(names, tmp_path) == ["d", "c", "b", "a", "e"]
+
+
+def test_new_correctness_file_rotates_the_prefix(tmp_path):
+    # Dropping the next round's file in is the only step.
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        shutil.copy(path, tmp_path)
+    names = _source_order()
+    old = rotation(names, tmp_path)[:50]
+    stems = [p.stem.removeprefix("CORRECTNESS_r") for p in tmp_path.iterdir()]
+    last = max(int(s) for s in stems if s.isdigit())
+    _write(tmp_path, last + 1, {n: GREEN for n in old})
+    new = rotation(names, tmp_path)[:50]
+    assert len(new) == 50
+    assert set(new).isdisjoint(old)

@@ -51,3 +51,54 @@ def test_no_module_defines_a_top_level_name_twice():
         if twice:
             dupes[path.relative_to(REPO).as_posix()] = twice
     assert dupes == {}
+
+
+KNOBS = {
+    "SPARK_GRAFT_ARTIFACTS",
+    "SPARK_GRAFT_SNAPSHOT",
+    "SPARK_GRAFT_SNAPSHOT_DIR",
+    "SPARK_GRAFT_STREAM_TMPDIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_MASTER",
+}
+
+
+def _env_key(node):
+    """The key node of an ``os.environ.get(k)``, ``os.environ[k]`` or
+    ``os.getenv(k)`` read, else None (any alias of ``os`` counts)."""
+
+    def is_environ(n):
+        return (isinstance(n, ast.Attribute) and n.attr == "environ") or (
+            isinstance(n, ast.Name) and n.id == "environ"
+        )
+
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        f = node.func
+        if (f.attr == "get" and is_environ(f.value)) or f.attr == "getenv":
+            return node.args[0] if node.args else node
+    if (
+        isinstance(node, ast.Subscript)
+        and isinstance(node.ctx, ast.Load)
+        and is_environ(node.value)
+    ):
+        return node.slice
+    return None
+
+
+def test_environment_knobs_are_the_pinned_set():
+    # Every environment variable the package reads is listed above, so a
+    # new knob shows up as an edit to this test.
+    names, dynamic = set(), []
+    for path, tree in _modules("pyspark_recs"):
+        for node in ast.walk(tree):
+            key = _env_key(node)
+            if key is None:
+                continue
+            if isinstance(key, ast.Constant) and isinstance(key.value, str):
+                names.add(key.value)
+            else:
+                dynamic.append((path.relative_to(REPO).as_posix(), node.lineno))
+    assert dynamic == []
+    assert names, "the scan found no read at all; it is not looking"
+    assert names == KNOBS

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -1605,18 +1606,18 @@ def test_stream_scratch_root_policy(monkeypatch, tmp_path):
     assert ws._stream_scratch_root() == expected
 
 
-def test_stream_exec_conf_scopes_state_partitions(spark, monkeypatch):
+def test_stream_exec_conf_scopes_state_partitions(spark):
     """r12-opt: the streaming-executed rows pin their state-store
     parallelism (spark.sql.shuffle.partitions at stream start) to
-    _stream_state_partitions() — sized by env/cpu budget, NOT the batch
-    session's shuffle width — and restore the session conf afterwards,
-    even on error."""
+    _stream_state_partitions(spark) — sized by the session's
+    parallelism, NOT its batch shuffle width — and restore the session
+    conf afterwards, even on error."""
     import pyspark_recs.workloads.streaming as ws
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     with ws._stream_exec_conf(spark):
-        assert spark.conf.get(key) == str(ws._stream_state_partitions())
+        assert spark.conf.get(key) == str(ws._stream_state_partitions(spark))
     assert spark.conf.get(key) == before
 
     try:
@@ -1626,12 +1627,9 @@ def test_stream_exec_conf_scopes_state_partitions(spark, monkeypatch):
         pass
     assert spark.conf.get(key) == before  # restored on error too
 
-    # Env override wins (the production sizing knob); default scales
-    # with the core budget instead of a local[32]-tuned constant.
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "13")
-    assert ws._stream_state_partitions() == 13
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS")
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
-    assert ws._stream_state_partitions() == 2
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
-    assert ws._stream_state_partitions() == 8
+    # Sized from the session, capped at 8 instead of a local[32]-tuned
+    # constant (the fixture session runs local[4]).
+    parallelism = spark.sparkContext.defaultParallelism
+    assert ws._stream_state_partitions(spark) == min(parallelism, 8)
+    wide = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=64))
+    assert ws._stream_state_partitions(wide) == 8
