@@ -4,6 +4,9 @@ consistency, and a fast oracle spot-check at sf0.001.
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import __spark_entry__ as entry_mod
 
 from tests.conftest import SF_DIR
@@ -64,6 +67,26 @@ def test_loader_normalizes_all_timestamps(spark):
                 assert isinstance(
                     df.schema["ts"].dataType, TimestampType
                 )
+
+
+def test_priority_rotation_names_all_resolve(tmp_path):
+    # The rotation comes from the CORRECTNESS files at import: every
+    # registered query keeps exactly one slot (a double slot skews the
+    # bounded verification window), and a row naming a query that is no
+    # longer registered takes none.
+    from pyspark_recs.workloads import llmops, recsys, relational, streaming
+    from pyspark_recs.workloads.priority import rotation
+
+    names = [n for m in (relational, llmops, recsys, streaming) for n in m.QUERIES]
+    repo = Path(__file__).resolve().parents[1]
+    order = rotation(names, repo)
+    assert len(order) == len(set(order))
+    assert set(order) == set(names) == set(entry_mod.queries())
+    row = {"rows_match": True, "schema_match": True, "hash_match": False}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"no_such_query": row, names[-1]: row}), encoding="utf-8"
+    )
+    assert rotation(names, tmp_path) == [names[-1]] + names[:-1]
 
 
 def test_bench_headline_names_resolve_and_unique():
