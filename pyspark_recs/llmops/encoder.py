@@ -127,79 +127,3 @@ class TinyTextEncoder(TinyMLPEncoder):
     def __init__(self, weights_path: str = _TEXT_WEIGHTS_PATH) -> None:
         super().__init__(weights_path=weights_path, pad_mode="cycle")
 
-
-def _st_available() -> bool:
-    """True iff the optional ``sentence_transformers`` dependency (and
-    so a real downloadable text model) is importable in this
-    environment."""
-    try:
-        import sentence_transformers  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class HashingSentenceEncoder:
-    """Vendored deterministic stand-in with SentenceTransformer
-    semantics — the fallback twin behind :func:`sentence_encoder`, the
-    same never-skip discipline as the streaming protobuf twin
-    (``streaming/ops.py:_tws_available``).
-
-    Signed feature hashing (the HashingVectorizer trick): each
-    lowercased word token maps to a bucket of a fixed ``dim``-wide
-    space via md5, with an md5-derived ±1 sign to keep collisions
-    unbiased; token counts accumulate and the vector L2-normalizes.
-    Deterministic across processes (no RNG, no weights), batched, and
-    honestly semantic at the bag-of-words level: texts sharing tokens
-    embed close, disjoint texts near-orthogonal — enough to exercise
-    every contract the real model does (batching, normalization,
-    cosine ordering) without network or model weights.
-    """
-
-    def __init__(self, dim: int = 384) -> None:
-        self.dim = dim
-
-    def encode(self, texts, normalize_embeddings: bool = True):
-        import hashlib
-        import re
-
-        out = np.zeros((len(texts), self.dim), dtype=np.float32)
-        for i, t in enumerate(texts):
-            for tok in re.findall(r"[a-z0-9]+", (t or "").lower()):
-                d = hashlib.md5(tok.encode()).digest()
-                idx = int.from_bytes(d[:4], "big") % self.dim
-                sign = 1.0 if d[4] & 1 else -1.0
-                out[i, idx] += sign
-        if normalize_embeddings:
-            norms = np.sqrt((out * out).sum(axis=1, keepdims=True))
-            out = out / np.maximum(norms, np.float32(1e-12))
-        return out
-
-
-def sentence_encoder():
-    """Batched payload encoder (the ``encode_payloads`` contract:
-    byte payloads in, one L2-normalized ``list[float]`` or ``None``
-    per payload out) backed by a real sentence-transformers MiniLM
-    when the optional dependency is installed, else by the vendored
-    :class:`HashingSentenceEncoder` twin. Selection is by environment,
-    never by skipping — both paths run the identical Arrow-batched
-    seam."""
-    if _st_available():
-        from sentence_transformers import SentenceTransformer
-
-        model = SentenceTransformer("all-MiniLM-L6-v2")
-    else:
-        model = HashingSentenceEncoder()
-
-    def enc(payloads):
-        out: list = [None] * len(payloads)
-        keep = [i for i, p in enumerate(payloads) if p]
-        if keep:
-            texts = [payloads[i].decode("utf-8", "ignore") for i in keep]
-            embs = model.encode(texts, normalize_embeddings=True)
-            for j, i in enumerate(keep):
-                out[i] = [float(x) for x in embs[j]]
-        return out
-
-    return enc

@@ -33,35 +33,6 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
-def read_binary_dir(
-    spark, path: str, glob: str | None = None
-) -> DataFrame:
-    """Real-files entry into the multimodal pipeline: Spark's built-in
-    ``binaryFile`` source reads a directory of media files as
-    (doc_id, source_path, n_bytes, payload) — the on-disk twin of
-    ``with_binary_payload``, so every downstream op (decode_metadata,
-    resize_payload, frame_sample, encoders) composes unchanged.
-    doc_id is the md5-long of the path: stable across re-lists, and
-    collision-safe far beyond any directory size.
-
-    Scale: binaryFile parallelizes per file and prunes by pathGlobFilter
-    at listing time; keep payload pruned before any shuffle (project
-    metadata first), the discipline every multimodal op here follows.
-    """
-    from pyspark_recs.llmops.hashing import md5_long
-
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    return raw.select(
-        md5_long(F.col("path")).alias("doc_id"),
-        F.col("path").alias("source_path"),
-        F.col("length").cast("int").alias("n_bytes"),
-        F.col("content").alias("payload"),
-    )
-
-
 def _decode_one(payload: bytes) -> dict:
     """STUB decoder. A real image decoder (PIL/ffmpeg/torchvision) would
     go here and raise NotImplementedError if the codec is unavailable;

@@ -1,12 +1,13 @@
 """Similarity search over embedding columns.
 
 Two tiers (SURVEY §2.7 M4/M7 generalized):
-- ``cosine_topk_bruteforce``: exact scan — the correctness baseline and
-  the oracle-checkable path. Dot products are computed with fixed-point
-  integer folds so results are bit-identical across engines and
-  partitionings.
-- ``lsh_topk``: MLlib BucketedRandomProjectionLSH — the 100 TB path
-  (probe only candidate buckets instead of all n·m pairs).
+- ``cosine_topk_bruteforce``: exact scan — the correctness baseline.
+  Dot products are computed with fixed-point integer folds so results
+  are bit-identical across engines and partitionings.
+- ``lsh_topk_deterministic``, ``ivf_topk``, ``ivfpq_topk``: the 100 TB
+  paths (probe only candidate buckets or cells instead of all n·m
+  pairs), every number engine-reproducible so each stays
+  oracle-checkable.
 
 Scale notes for brute force: queries are broadcast (small side), the
 candidate scan is embarrassingly parallel, and per-query top-k uses a
@@ -444,8 +445,8 @@ def assign_cells(
     window over the N×C expansion.
 
     Returns (id_col, vec_col, vnorm, cell_id). Defaults to the
-    deterministic lowest-id centroids (oracle-checkable); pass
-    ``kmeans_centroids(...)`` for production cells. Callers that share
+    deterministic lowest-id centroids (oracle-checkable); pass fitted
+    (cell_id, cvec) centroids for production cells. Callers that share
     one corpus materialize THIS table once (workloads' session-shared
     ``_cell_assign16``) — at 100 TB the assignment is the artifact you
     partition/bucket the vector table by."""
@@ -515,8 +516,8 @@ def semantic_dedup(
     partial aggregate (no window over the N×C expansion); the pair join
     is keyed on cell_id, never all-pairs; `drop` derivation is a
     distinct + broadcastable semi-join. Defaults to the deterministic
-    lowest-id centroid stand-in (oracle-checkable); pass
-    ``kmeans_centroids(...)`` for quality-fit cells in production, or
+    lowest-id centroid stand-in (oracle-checkable); pass fitted
+    ``centroids`` for quality-fit cells in production, or
     ``assigned`` (an :func:`assign_cells` table, possibly session-
     shared) to skip re-assignment entirely.
     """
@@ -568,7 +569,7 @@ def ivf_topk(
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate nearest neighbors (the inverted-file scale
-    path, complementing ``lsh_topk``). ``assigned`` (an
+    path, complementing ``lsh_topk_deterministic``). ``assigned`` (an
     :func:`assign_cells` table over ``candidates``, possibly
     session-shared) skips rebuilding the inverted file; the default
     centroids of both MUST match.
@@ -580,11 +581,11 @@ def ivf_topk(
     partition/bucket the candidate table BY cell_id so a probe join
     prunes partitions, and size n_cells ≈ √N with k-means centroids.
 
-    Pass ``centroids`` — a (cell_id, cvec) DataFrame, e.g. from
-    ``kmeans_centroids`` — for quality-fit cells in production. The
+    Pass ``centroids`` — a fitted (cell_id, cvec) DataFrame — for
+    quality-fit cells in production. The
     default (the ``n_cells`` lowest-id candidate vectors) is a
     deterministic stand-in that keeps the whole operator
-    DuckDB-oracle-checkable, unlike the seeded-model LSH path.
+    DuckDB-oracle-checkable.
 
     Output: query_id, neighbor_id, cos_sim, rank — same contract as
     ``cosine_topk_bruteforce`` (self-matches excluded).
@@ -681,101 +682,6 @@ def ivf_topk(
     )
 
 
-def lsh_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-    max_candidates_per_query: int = 4096,
-) -> DataFrame:
-    """Approximate top-k via random-projection LSH (the scale path:
-    candidate generation by bucket equi-join instead of a full cross
-    product).
-
-    Uses MLlib's BucketedRandomProjectionLSH only to fit the seeded
-    projections; the join itself is a hand-rolled (table, bucket)
-    equi-join so candidate volume is bounded: after pair-dedup, each
-    query keeps at most ``max_candidates_per_query`` candidates before
-    exact rescoring. ``approxSimilarityJoin`` with an infinite radius
-    would instead score *every* colliding pair — a pathological bucket
-    (all-zero vectors, a heavy hub) degenerates to near-all-pairs.
-    Here the worst case is queries × max_candidates exact distances,
-    by construction.
-
-    Distances are Euclidean; for unit-normalized embeddings the ranking
-    is equivalent to cosine. Not oracle-checkable (model-seeded), tested
-    by recall-vs-bruteforce in tests/.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    cand = candidates.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.col(vec_col)).alias("features"),
-    )
-    qry = queries.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.col(vec_col)).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(cand)
-
-    def _buckets(df: DataFrame, id_out: str, vec_out: str) -> DataFrame:
-        # hashes is array<vector> (one 1-dim vector per table); explode to
-        # (table_idx, bucket) so colliding rows meet on an equi-join key.
-        return model.transform(df).select(
-            F.col("id").alias(id_out),
-            F.col("vec").alias(vec_out),
-            F.posexplode("hashes").alias("table_idx", "hvec"),
-        ).select(
-            id_out,
-            vec_out,
-            "table_idx",
-            vector_to_array("hvec")[0].cast("long").alias("bucket"),
-        )
-
-    qb = _buckets(qry, "query_id", "qvec")
-    cb = _buckets(cand, "neighbor_id", "nvec")
-    pairs = (
-        qb.join(cb, ["table_idx", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        # Dedup pairs colliding in several tables (one shuffle, keeps the
-        # vectors via first() instead of a join-back).
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.first("qvec").alias("qvec"), F.first("nvec").alias("nvec"))
-    )
-    # Safety valve: bound exact-rescore work per query. The cap is far
-    # above k, so recall is unchanged unless a bucket truly degenerates.
-    wcap = Window.partitionBy("query_id").orderBy(F.asc("neighbor_id"))
-    capped = (
-        pairs.withColumn("cand_rank", F.row_number().over(wcap))
-        .filter(F.col("cand_rank") <= max_candidates_per_query)
-    )
-    dist = F.sqrt(
-        _fixed_dot(F.col("qvec"), F.col("qvec"))
-        + _fixed_dot(F.col("nvec"), F.col("nvec"))
-        - 2 * _fixed_dot(F.col("qvec"), F.col("nvec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        capped.select("query_id", "neighbor_id", dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def _lsh_plan(
     in_dim: int,
     num_hash_tables: int,
@@ -815,10 +721,9 @@ def lsh_topk_deterministic(
     in_dim: int = 64,
 ) -> DataFrame:
     """Random-projection LSH top-k with DETERMINISTIC md5-derived ±1
-    hyperplanes — same candidate-generation shape as :func:`lsh_topk`
-    (per-table bucket equi-join, pair dedup, bounded exact rescore) but
-    every number is engine-reproducible, so the whole operator is
-    DuckDB-oracle-checkable (`lsh_topk_oracle_sql` is the twin).
+    hyperplanes: per-table bucket equi-join, pair dedup and a bounded
+    exact rescore, where every number is engine-reproducible, so the
+    whole operator is DuckDB-oracle-checkable (`lsh_topk_oracle_sql` is the twin).
 
     Bucketing is exact integer math: the projection onto each
     hyperplane is a fixed-point ±-sum of the vector's quantized
@@ -830,7 +735,7 @@ def lsh_topk_deterministic(
     same fixed-point dot products (for unit-norm embeddings the
     ranking equals cosine).
 
-    Scale: identical to lsh_topk — candidate volume is bounded by the
+    Scale: candidate volume is bounded by the
     bucket equi-join plus the per-query cap, never all-pairs; the
     hyperplanes are literals compiled into the plan (no fit job, no
     broadcast of a model).
@@ -1212,53 +1117,6 @@ def embedding_covariance(
     )
 
 
-def pca_projection(cov: DataFrame, top_k: int) -> "list[list[float]]":
-    """Eigendecompose a (i, j, cov) upper-triangle covariance table into
-    the top-``top_k`` principal directions (rows of the returned
-    projection matrix, eigenvalue-descending).
-
-    The d×d matrix is driver-sized by construction (d ≪ 10³ for any
-    embedding model) — collecting it is the correct move, same as
-    k-means centers; the EXPENSIVE pass is `embedding_covariance`,
-    which stays distributed. Apply the projection with a zip_with dot
-    per component (JVM-side), or fold it into `ivf_topk` candidates to
-    shrink vectors before indexing."""
-    import numpy as np
-
-    rows = cov.collect()
-    d = max(r.j for r in rows)
-    m = np.zeros((d, d))
-    for r in rows:
-        m[r.i - 1, r.j - 1] = r.cov
-        m[r.j - 1, r.i - 1] = r.cov
-    vals, vecs = np.linalg.eigh(m)
-    order = np.argsort(vals)[::-1][:top_k]
-    return [[float(x) for x in vecs[:, k]] for k in order]
-
-
-def kmeans_centroids(
-    vectors: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Fit k-means coarse centroids for ``ivf_topk`` (the production
-    quantizer; SURVEY §2.7 M4's LSH escape hatch generalized to IVF).
-    Returns (cell_id, cvec). Seeded but iterative float math, so
-    pipelines using it take the rows-only correctness path."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = vectors.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return vectors.sparkSession.createDataFrame(
-        centers, "cell_id long, cvec array<double>"
-    )
-
-
 def scalar_quantize(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1322,8 +1180,8 @@ def pq_encode(
 
     Codebooks default to the deterministic lowest-id corpus vectors
     (same stand-in as semantic_dedup/ivf_topk, keeping the operator
-    oracle-checkable); pass per-subspace ``kmeans_centroids`` output
-    for production quality.
+    oracle-checkable); pass fitted per-subspace codebooks for
+    production quality.
 
     Determinism: sub-distances are per-term fixed-point quantized
     BIGINTs (floor((a−b)²·1e12 + 0.5), summed exactly), and argmin
@@ -1460,8 +1318,8 @@ def ivfpq_topk(
 
     Both codebooks default to deterministic lowest-id corpus vectors
     (the stand-in that keeps the operator DuckDB-oracle-checkable —
-    same convention as ``ivf_topk``/``pq_encode``); pass
-    ``kmeans_centroids`` output for production quality.
+    same convention as ``ivf_topk``/``pq_encode``); pass fitted
+    codebooks for production quality.
 
     Determinism: ADC entries are the same fixed-point BIGINT
     sub-distances as ``pq_encode`` (floor((a−b)²·1e12 + 0.5) per term,
@@ -1674,8 +1532,7 @@ def cluster_balanced_sample(
     rank is row_number + filter, which Spark executes as
     WindowGroupLimit — each task keeps ≤ cap rows per cell before the
     exchange. Defaults to deterministic lowest-id centroids
-    (oracle-checkable); pass ``kmeans_centroids`` output in production,
-    or ``assigned`` (an :func:`assign_cells` table, possibly session-
+    (oracle-checkable); pass fitted ``centroids`` in production, or ``assigned`` (an :func:`assign_cells` table, possibly session-
     shared) to skip re-assignment.
     """
     from pyspark_recs.llmops.hashing import md5_long
@@ -1711,10 +1568,9 @@ def lloyd_kmeans_fixed(
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Lloyd's k-means in FIXED-POINT arithmetic — the hash-checkable
-    sibling of :func:`kmeans_centroids` (whose pyspark.ml float
-    iterations force the rows-only correctness path). Vectors are
-    quantized once to bigint (``floor(x*scale + 0.5)``), every
-    distance is an exact integer sum of squared differences, and each
+    form of k-means (pyspark.ml's float iterations would force a
+    rows-only correctness path). Vectors are quantized once to bigint
+    (``floor(x*scale + 0.5)``), every distance is an exact integer sum of squared differences, and each
     centroid update is ``floor(sum / count)`` evaluated as an exact
     double division of exactly-representable integers — so any engine
     replaying the same unrolled iterations lands on the SAME centroids

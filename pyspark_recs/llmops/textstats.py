@@ -306,46 +306,6 @@ def chunk_documents(
     )
 
 
-def chunk_documents_udtf(
-    df: DataFrame,
-    chunk: int = 32,
-    stride: int = 24,
-    text_col: str = "text",
-) -> DataFrame:
-    """Python-UDTF twin of :func:`chunk_documents` — the table-function
-    extension surface (SURVEY §2.8): one input row fans out to N chunk
-    rows from arbitrary Python. Semantically identical to the
-    relational chunker (parity-tested); use THAT in production — this
-    exists so users can drop in chunkers Spark expressions can't
-    express (tokenizer-aware splitting, sentence boundaries) and keep
-    the same output contract.
-
-    Scale: rows stream through the Python worker Arrow-batched; no
-    shuffle, but it leaves whole-stage codegen — budget ~10x the
-    relational form's CPU.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="doc_id bigint, chunk_idx int, chunk_text string, "
-                     "chunk_tokens int")
-    class _Chunker:
-        def eval(self, doc_id, text):  # noqa: ANN001
-            words = [w for w in (text or "").split(" ") if w]
-            for idx, s in enumerate(range(0, len(words), stride)):
-                piece = words[s : s + chunk]
-                yield doc_id, idx, " ".join(piece), len(piece)
-
-    spark = df.sparkSession
-    spark.udtf.register("chunk_documents_udtf", _Chunker)
-    df.select("doc_id", F.col(text_col).alias("text")).createOrReplaceTempView(
-        "_chunk_udtf_in"
-    )
-    return spark.sql(
-        "SELECT c.* FROM _chunk_udtf_in, "
-        "LATERAL chunk_documents_udtf(doc_id, text) c"
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     capacity: int = 512,

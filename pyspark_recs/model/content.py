@@ -393,31 +393,3 @@ def score_candidates_joint(
         .select("user_id", "item_id", "rank")
     )
 
-
-def content_grid_search(
-    data: ContentTrainingData,
-    reg_grid: tuple = (0.0, 0.01, 0.1),
-    k: int = 10,
-    seed: int = 42,
-) -> list:
-    """M2-style fan-out over regularization strengths, each config
-    evaluated with the M3 ranking metrics on the held-out protocol;
-    best-first by recall@k (grid-order tiebreak, deterministic) —
-    the reference's foreach-over-configs (my_merlin_flow.py:248-263)
-    applied to the content ranker."""
-    from pyspark_recs.model.metrics import ranking_metrics
-
-    results = []
-    for reg in reg_grid:
-        assembler, model = train_content_model(
-            data.train, reg_param=reg, seed=seed
-        )
-        preds = score_candidates(assembler, model, data.eval_candidates, k=k)
-        metrics = ranking_metrics(preds, data.truth, k=k)
-        results.append(
-            {"reg_param": reg, "metrics": metrics, "model": model}
-        )
-    return sorted(
-        results,
-        key=lambda r: -r["metrics"][f"recall_at_{k}"],
-    )

@@ -9,8 +9,8 @@ no per-check scans), returning a violations report the caller can
 assert on or route to monitoring.
 
 Scale: `schema_report` is one hash-aggregate over the table —
-count/countDistinct/null-counts all share the scan. `check_references`
-is a broadcast-able left-anti join. Nothing collects more than one row.
+count/countDistinct/null-counts all share the scan. Nothing collects
+more than one row.
 """
 
 from __future__ import annotations
@@ -61,19 +61,6 @@ def schema_report(
         return {}
     row = df.agg(*aggs).first()
     return {k: int(v) for k, v in row.asDict().items()}
-
-
-def check_references(
-    child: DataFrame, parent: DataFrame, child_key: str, parent_key: str
-) -> int:
-    """dbt `relationships` test: rows in ``child`` whose key has no
-    match in ``parent`` (orphaned foreign keys). One left-anti join."""
-    orphans = child.filter(F.col(child_key).isNotNull()).join(
-        parent.select(F.col(parent_key).alias(child_key)).distinct(),
-        child_key,
-        "left_anti",
-    )
-    return orphans.count()
 
 
 def assert_schema(

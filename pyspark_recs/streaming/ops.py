@@ -665,47 +665,28 @@ def stream_to_kv_sink(
     return writer.start()
 
 
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas's Python worker speaks protobuf to
-    the state server; without ``google.protobuf`` the query fails at
-    runtime, so operator selection checks the dependency up front."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def streaming_user_profile(
     events: DataFrame,
     user_col: str = "user_id",
     type_col: str = "event_type",
     value_col: str = "value",
 ) -> DataFrame:
-    """Running per-user profile via ``transformWithStateInPandas`` —
-    the Spark 4 arbitrary-state API (typed composite state, state TTL,
-    timers) that supersedes applyInPandasWithState for new operators.
-    Where the optional protobuf dependency is absent (this sandbox),
-    an ``applyInPandasWithState`` twin with identical output semantics
-    runs instead — same state content, same update-mode emissions —
-    so the operator (and its tests) never depend on the extra wheel.
-
-    State per user: a ValueState (event count, fixed-point value cents)
-    plus a MapState used as the set of distinct event types seen — the
-    running-profile shape a feature store maintains incrementally
-    instead of rescanning history. Emits the updated profile for every
-    user touched by the micro-batch (output mode ``update``).
+    """Running per-user profile via ``applyInPandasWithState``: the
+    state per user is (event count, fixed-point value cents, sorted
+    distinct event types seen), the running-profile shape a feature
+    store maintains incrementally instead of rescanning history. Emits
+    the updated profile for every user touched by the micro-batch
+    (output mode ``update``).
 
     Scale: state is O(1) per user (the type set is bounded by the
     event-type vocabulary); keys partition across the state stores of
     ``spark.sql.shuffle.partitions`` tasks; value math is integer cents
     so the running total is order-independent and matches the batch
-    twin bit-exactly. Pass a ttlDurationMs to the states to evict idle
-    users when the key space is unbounded.
+    twin bit-exactly. A ``GroupStateTimeout`` would evict idle users
+    when the key space is unbounded.
     """
     import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     prepared = events.select(
         F.col(user_col).alias("user_id"),
@@ -714,83 +695,33 @@ def streaming_user_profile(
         .cast("long")
         .alias("value_cents"),
     )
-    out_schema = (
-        "user_id long, n_events long, total_value double, n_event_types long"
-    )
 
-    if not _tws_available():
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            if state.exists:
-                n_events, cents, types = state.get
-                seen = set(types)
-            else:
-                n_events, cents, seen = 0, 0, set()
-            for pdf in pdfs:
-                n_events += int(len(pdf))
-                cents += int(pdf["value_cents"].sum())
-                seen.update(str(t) for t in pdf["event_type"].unique())
-            state.update((n_events, cents, sorted(seen)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "total_value": [cents / 100.0],
-                    "n_event_types": [len(seen)],
-                }
-            )
-
-        return prepared.groupBy("user_id").applyInPandasWithState(
-            update,
-            out_schema,
-            "n_events long, value_cents long, types array<string>",
-            "update",
-            GroupStateTimeout.NoTimeout,
+    def update(key, pdfs, state):
+        if state.exists:
+            n_events, cents, types = state.get
+            seen = set(types)
+        else:
+            n_events, cents, seen = 0, 0, set()
+        for pdf in pdfs:
+            n_events += int(len(pdf))
+            cents += int(pdf["value_cents"].sum())
+            seen.update(str(t) for t in pdf["event_type"].unique())
+        state.update((n_events, cents, sorted(seen)))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n_events],
+                "total_value": [cents / 100.0],
+                "n_event_types": [len(seen)],
+            }
         )
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events long, value_cents long"
-            )
-            self._types = handle.getMapState(
-                "types", "event_type string", "seen int"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n_events, cents = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n_events += int(len(pdf))
-                cents += int(pdf["value_cents"].sum())
-                for t in pdf["event_type"].unique():
-                    self._types.updateValue((str(t),), (1,))
-            self._totals.update((n_events, cents))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "total_value": [cents / 100.0],
-                    "n_event_types": [n_types],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        ProfileProcessor(),
-        out_schema,
+    return prepared.groupBy("user_id").applyInPandasWithState(
+        update,
+        "user_id long, n_events long, total_value double, n_event_types long",
+        "n_events long, value_cents long, types array<string>",
         "update",
-        "none",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -856,125 +787,6 @@ def streaming_funnel(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_debounce(
-    events: DataFrame,
-    gap_us: int = 3600 * 1_000_000,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Stateful per-key debounce (rate limiter): emit an event only if
-    at least ``gap_us`` has elapsed since the LAST EMITTED event of the
-    same key — the alerting/notification-throttle primitive, and a
-    different beast from dropDuplicates (which keys on identity) or
-    sessionization (which only observes gaps): whether an event
-    survives depends on the previously-surviving event, so the
-    computation is inherently a fold, not a window.
-
-    Ties/ordering use the composite clock k = ts_us·4096 + event_id%4096
-    (strictly increasing within a key for distinct events), matching
-    the batch twin ``workloads.streaming.s12_debounce`` bit-for-bit.
-
-    Per-key state is ONE long (last emitted k). Output mode ``append``:
-    each surviving event is emitted exactly once, in arrival order.
-    Same in-order-arrival caveat as streaming_sessionize.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id long, event_id long, ts_us long"
-    state_schema = "last_k long"
-
-    with_us = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-    )
-    gap_k = gap_us * 4096
-
-    def update(key, pdfs, state):
-        (last_k,) = state.get if state.exists else (None,)
-        kept_ids, kept_ts = [], []
-        # Concat-before-sort (the s21 100x lesson): per-chunk sorting
-        # folds chunks in partitioning-dependent arrival order.
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if parts:
-            big = pd.concat(parts) if len(parts) > 1 else parts[0]
-            for _, row in (
-                big.sort_values(["ts_us", "event_id"]).iterrows()
-            ):
-                k = int(row.ts_us) * 4096 + int(row.event_id) % 4096
-                if last_k is None or k - last_k >= gap_k:
-                    kept_ids.append(int(row.event_id))
-                    kept_ts.append(int(row.ts_us))
-                    last_k = k
-        state.update((last_k,))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(kept_ids),
-                "event_id": kept_ids,
-                "ts_us": kept_ts,
-            }
-        )
-
-    return with_us.groupBy("user_id").applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_idempotent_window_sink(
-    events: DataFrame,
-    out_dir: str,
-    ts_col: str = "ts",
-    window: str = "1 day",
-    watermark: str = "2 days",
-):
-    """Exactly-once-by-idempotence streaming sink: the watermarked
-    tumbling aggregate lands in a parquet table PARTITIONED BY window
-    start, written via foreachBatch with DYNAMIC partition overwrite —
-    re-processing a micro-batch (failure/restart replay) rewrites the
-    same partitions with the same content instead of appending
-    duplicates. This is the production pattern for streaming aggregates
-    into a lake table when the sink has no transactional upsert: the
-    (window) partition is the idempotency key.
-
-    Returns ``(aggregate, foreachBatch_fn)``; the caller wires them:
-    ``agg.writeStream.outputMode("update").foreachBatch(fn).start()``.
-    The companion reader is a plain ``spark.read.parquet(out_dir)``.
-
-    Scale: each micro-batch overwrites only the partitions it touches
-    (dynamic mode); closed windows stop changing once the watermark
-    passes, so steady-state batches rewrite a bounded set of recent
-    partitions.
-    """
-    agg = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).start.alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-    )
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        )
-        (
-            batch.write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(out_dir)
-        )
-
-    return agg, write_batch
 
 
 def streaming_histogram_quantiles(
@@ -1182,8 +994,7 @@ def streaming_pit_enrich(
     Scale: per micro-batch the union-sort shuffles (batch ∪ history)
     on the key once; for large histories, pre-bucket the history table
     on the key so only the batch side shuffles. Exactly-once depends on
-    the sink being idempotent per batch_id (see
-    streaming_idempotent_window_sink for the parquet pattern).
+    the sink being idempotent per batch_id.
     """
     from pyspark_recs.sql.transforms import asof_join
 

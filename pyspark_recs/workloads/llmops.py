@@ -38,7 +38,6 @@ from pyspark_recs.llmops.similarity import (
     crossmodal_topk,
     embedding_neardup_pairs,
     ivf_topk,
-    lsh_topk,
     semantic_dedup,
     embedding_covariance,
     jl_project,
@@ -583,8 +582,7 @@ def l12_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     never all-pairs). Uses the DETERMINISTIC md5-derived-hyperplane
     variant (llmops.similarity.lsh_topk_deterministic) so the full
     operator — bucketing, candidate capping, exact rescore, top-k — is
-    hash-checked against the DuckDB oracle; the MLlib-seeded lsh_topk
-    remains available and is recall-tested in tests/."""
+    hash-checked against the DuckDB oracle."""
     from pyspark_recs.llmops.similarity import lsh_topk_deterministic
 
     emb = load_table(spark, sf, "embeddings")
@@ -1762,7 +1760,7 @@ def l43_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup corpus filter (llmops.similarity.semantic_dedup): every
     embedding labeled keep/drop after within-cluster cosine dedup —
     deterministic lowest-id centroids keep the whole pipeline
-    oracle-checkable (swap in kmeans_centroids at production). θ=0.35
+    oracle-checkable (pass fitted centroids in production). θ=0.35
     sits at ~p99 of this synthetic corpus's within-cell cosine
     (max ≈ 0.49), so both keep and drop branches are exercised at every
     sf; a production run on real embeddings uses θ≈0.9+."""
@@ -1920,8 +1918,8 @@ L46_SQL = _l46_sql()
 def l44_embedding_covariance(spark: SparkSession, sf: str) -> DataFrame:
     """Exact corpus covariance matrix (upper triangle) of the embedding
     column in one distributed pass — the PCA/whitening sufficient
-    statistic (llmops.similarity.embedding_covariance; eigendecompose
-    with pca_projection). Fixed-point moment sums make the d²/2 numbers
+    statistic (llmops.similarity.embedding_covariance; its
+    eigendecomposition is a driver-sized d×d problem). Fixed-point moment sums make the d²/2 numbers
     bit-identical across engines and partitionings."""
     emb = load_table(spark, sf, "embeddings")
     return embedding_covariance(emb, dim=64)
@@ -4354,9 +4352,9 @@ FROM toks t LEFT JOIN per p2 USING (doc_id)
 # --------------------------------------------------------------------- l85
 def l85_kmeans_train(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic Lloyd's k-means TRAINING over the embeddings
-    table — iterative clustering on the hash-checked path (the
-    pyspark.ml ``kmeans_centroids`` fit is rows-only by nature; this
-    fixed-point formulation is exact): 2 Lloyd rounds at scale 1e6,
+    table — iterative clustering on the hash-checked path (a
+    pyspark.ml KMeans fit is rows-only by nature; this fixed-point
+    formulation is exact): 2 Lloyd rounds at scale 1e6,
     8 lowest-id seeds, integer distances, floor-division centroid
     updates, empty cells keep their centroid. The DuckDB twin replays
     both unrolled iterations CTE-by-CTE (the l71 BPE oracle

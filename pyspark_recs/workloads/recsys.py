@@ -4133,7 +4133,7 @@ SELECT 'no_user' AS userId, '[]' AS recs
 # --------------------------------------------------------------------- rs38
 def rs38_predictions_log(spark: SparkSession, sf: str) -> DataFrame:
     """S10's experiment-tracking predictions log, as hashable rows: the
-    exact JSON line ``predictions_json_log`` serializes per user
+    exact JSON line ``df.write.json`` serializes per user
     (reference: the prediction asset logged per run,
     my_merlin_flow.py:376-411). The Spark side uses the REAL
     serializer (``to_json`` over the keyed-table struct — what

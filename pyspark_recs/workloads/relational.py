@@ -2646,7 +2646,7 @@ def r63_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     Scale: one shuffle on the join key for both sides; the classifying
     projection is codegen'd. At 100 TB both snapshot scans prune to the
     key + compared columns, and bucketing both snapshots on the key
-    (io/sinks.py:write_bucketed) removes the exchange entirely — the
+    (``bucketBy`` at write) removes the exchange entirely — the
     nightly-diff production layout.
     """
     orders = load_table(spark, sf, "orders")
@@ -3098,9 +3098,8 @@ def r73_delete_propagation(spark: SparkSession, sf: str) -> DataFrame:
     — their orders, and those orders' lineitems — and reports per-table
     (rows, to_delete, kept). The md5-keyed victim set stands in for the
     request table; counts are the pre-flight audit every erasure job
-    runs before rewriting. The rewrite itself is
-    ``io.sinks.propagate_deletes`` (anti-join + partition rewrite,
-    tested separately); this query is its plan.
+    runs before rewriting. The rewrite itself (anti-join + partition
+    rewrite) reads this plan.
 
     Scale: the victim set is request-volume-sized and BROADCASTS to
     every fact anti/semi-join — no fact shuffles anywhere; the lineitem

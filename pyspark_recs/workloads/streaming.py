@@ -343,7 +343,7 @@ FROM fresh GROUP BY day_s
 # --------------------------------------------------------------------- s09
 def s09_user_profile(spark: SparkSession, sf: str) -> DataFrame:
     """Batch twin of streaming.ops.streaming_user_profile (the
-    transformWithState running per-user profile): event count,
+    applyInPandasWithState running per-user profile): event count,
     fixed-point total value, distinct event types — the feature-store
     row the incremental operator maintains without rescanning history.
 
@@ -508,8 +508,8 @@ def s12_debounce(spark: SparkSession, sf: str) -> DataFrame:
     only if ≥1 h has elapsed since the last EMITTED event of that user
     — a fold, not a window: whether an event survives depends on the
     previously-surviving event, so lag()/session tricks can't express
-    it (the same reason the streaming twin
-    ``streaming.ops.streaming_debounce`` carries explicit state). This
+    it (the same reason a streaming form needs explicit per-key
+    state). This
     batch form collects each user's ordered composite clock
     k = ts_us·4096 + event_id%4096 (strictly increasing, tie-free) and
     left-folds it JVM-side; DuckDB mirrors with ``list_reduce`` over a

@@ -1,12 +1,10 @@
-"""Optional-dependency integration test for the pluggable encoder seam.
+"""Integration tests for the pluggable encoder seam.
 
-The engine's multimodal path (pyspark_recs/llmops/multimodal.py) ships a
-deterministic stand-in encoder; sentence_encoder() swaps in a real public
-model (sentence-transformers) through the same batched contract —
-mirroring the reference's CLIP usage (reference src/app_utils.py:10-26) —
-falling back to a vendored deterministic hashing twin wherever the
-dependency is absent (this sandbox has no model weights or network), so
-nothing here ever skips.
+The engine's multimodal path (pyspark_recs/llmops/multimodal.py) runs
+any batched encoder through ``encode_payloads``; these tests drive the
+shipped tiny-MLP checkpoints through it — real float32 tensor math with
+no network and no optional dependency, standing in for the reference's
+CLIP usage (reference src/app_utils.py:10-26).
 """
 
 from __future__ import annotations
@@ -14,79 +12,6 @@ from __future__ import annotations
 import math
 
 from pyspark_recs.llmops.multimodal import encode_payloads
-
-
-def test_sentence_encoder_selects_impl_by_dependency():
-    # sentence_encoder picks the real MiniLM when the optional
-    # sentence_transformers dependency exists, else the vendored
-    # HashingSentenceEncoder twin. This asserts the selection logic
-    # matches the environment — it never skips, in either environment
-    # (same discipline as the streaming protobuf twin).
-    from pyspark_recs.llmops.encoder import _st_available
-
-    try:
-        import sentence_transformers  # noqa: F401
-
-        assert _st_available()
-    except ImportError:
-        assert not _st_available()
-
-
-def test_sentence_model_through_encoder_seam(spark):
-    # Runs whichever text model the environment supports through the
-    # SAME batched contract (byte payloads in, one normalized vector
-    # or None per payload out — identical to tiny_image_encoder's
-    # shape). The contract assertions hold for both implementations.
-    from pyspark_recs.llmops.encoder import sentence_encoder
-
-    enc = sentence_encoder()
-    docs = spark.createDataFrame(
-        [
-            (1, b"a red summer dress"),
-            (2, b"leather ankle boots"),
-            (3, b"a bright red summer dress"),
-            (4, b""),
-        ],
-        "doc_id long, payload binary",
-    )
-    rows = {
-        r.doc_id: r.embedding
-        for r in encode_payloads(docs, encoder=enc).collect()
-    }
-    # empty payload rejects (dead-letter rule); the rest encode
-    assert set(rows) == {1, 2, 3}
-    for v in rows.values():
-        assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-3
-
-    def cos(a, b):
-        return sum(x * y for x, y in zip(a, b))
-
-    # semantic ordering: the near-paraphrase of doc 1 embeds closer
-    # to it than the unrelated text does — true for MiniLM and for
-    # the hashing twin (shared-token overlap)
-    assert cos(rows[1], rows[3]) > cos(rows[1], rows[2])
-
-
-def test_hashing_sentence_encoder_deterministic_and_batch_invariant():
-    # The vendored twin itself: cross-instance determinism and
-    # batch-shape invariance (encoding together == encoding split),
-    # the property that makes Arrow batch sizing a pure tuning knob.
-    import numpy as np
-
-    from pyspark_recs.llmops.encoder import HashingSentenceEncoder
-
-    texts = ["alpha beta", "beta gamma delta", "zeta", "alpha beta"]
-    a = HashingSentenceEncoder().encode(texts)
-    b = HashingSentenceEncoder().encode(texts)
-    assert np.allclose(a, b)
-    split = np.vstack(
-        [HashingSentenceEncoder().encode(texts[:2]),
-         HashingSentenceEncoder().encode(texts[2:])]
-    )
-    assert np.allclose(a, split)
-    # identical texts → identical vectors; unit norms
-    assert np.allclose(a[0], a[3])
-    assert np.allclose((a * a).sum(axis=1), 1.0, atol=1e-5)
 
 
 def test_tiny_mlp_checkpoint_through_encoder_seam(spark):

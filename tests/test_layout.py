@@ -1,79 +1,7 @@
-"""Z-order layout tests: the Morton code itself, and the pruning
-benefit — z-clustered files must cover tight min/max rectangles on BOTH
-keys, while a hash layout's files each span the full range."""
+"""At-rest table layout: schema evolution across appended parquet
+drops."""
 
 from __future__ import annotations
-
-import glob
-
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
-
-from pyspark_recs.io import load_table
-from pyspark_recs.io.layout import fixed_width_bucket, morton_code, zorder_write
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_morton_code_interleaves_bits(spark):
-    df = spark.createDataFrame(
-        [(0, 0), (1, 0), (0, 1), (3, 5)], "x long, y long"
-    )
-    got = [
-        r.z
-        for r in df.select(
-            morton_code(F.col("x"), F.col("y"), bits=4).alias("z")
-        ).collect()
-    ]
-    # z(3,5) : x=0011, y=0101 -> interleaved y3x3 y2x2 y1x1 y0x0
-    #          = 0(0) 1(0) 0(1) 1(1) = 0b00100111 = 39
-    assert got == [0, 1, 2, 39]
-
-
-def _per_file_ranges(path: str, col: str) -> list[int]:
-    spans = []
-    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    mins.append(c.statistics.min)
-                    maxs.append(c.statistics.max)
-        if mins:
-            spans.append(max(maxs) - min(mins))
-    return spans
-
-
-def test_zorder_write_tightens_minmax_on_both_dims(spark, tmp_path):
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    lo_max = li.agg(F.max("l_orderkey")).collect()[0][0]
-    lp_max = li.agg(F.max("l_partkey")).collect()[0][0]
-
-    zpath, hpath = str(tmp_path / "zorder"), str(tmp_path / "hashed")
-    zorder_write(
-        li,
-        zpath,
-        fixed_width_bucket(F.col("l_orderkey"), 0, lo_max, bits=8),
-        fixed_width_bucket(F.col("l_partkey"), 0, lp_max, bits=8),
-        n_files=8,
-        bits=8,
-    )
-    li.repartition(8).write.mode("overwrite").parquet(hpath)
-
-    for col in ("l_orderkey", "l_partkey"):
-        z = _per_file_ranges(zpath, col)
-        h = _per_file_ranges(hpath, col)
-        assert len(z) == 8 and len(h) == 8
-        # hash layout: every file spans ~the full key range; z-order:
-        # average span must be meaningfully tighter on BOTH dimensions.
-        assert sum(z) / len(z) < 0.8 * (sum(h) / len(h)), col
-
-    # layout change must not lose rows
-    assert spark.read.parquet(zpath).count() == li.count()
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):
@@ -89,32 +17,3 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert set(df.columns) == {"id", "x", "score"}
     rows = {r.id: r.score for r in df.collect()}
     assert rows[1] is None and rows[2] == 9.5
-
-
-def test_orc_roundtrip_preserves_pushdown(spark, tmp_path):
-    """write_columnar(fmt='orc') round-trips values exactly and the ORC
-    scan still gets column pruning + predicate pushdown — the two plan
-    properties that make the at-rest format swappable."""
-    from pyspark_recs.io.sinks import read_columnar, write_columnar
-
-    src = load_table(spark, "/root/testdata/sf0.001", "orders")
-    path = str(tmp_path / "orders_orc")
-    write_columnar(src, path, fmt="orc")
-
-    back = read_columnar(spark, path, fmt="orc")
-    assert back.count() == src.count()
-    filtered = back.filter(F.col("o_custkey") == 7).select(
-        "o_orderkey", "o_totalprice"
-    )
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(o_custkey), EqualTo(o_custkey,7)" in plan
-    # column pruning: the scan reads only the 3 referenced columns
-    assert "o_orderpriority" not in plan.split("ReadSchema")[1][:200]
-    want = {
-        (r.o_orderkey, r.o_totalprice)
-        for r in src.filter(F.col("o_custkey") == 7)
-        .select("o_orderkey", "o_totalprice")
-        .collect()
-    }
-    got = {(r.o_orderkey, r.o_totalprice) for r in filtered.collect()}
-    assert got == want and got

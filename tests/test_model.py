@@ -268,22 +268,6 @@ def test_content_model_learns_planted_preference(spark):
     assert w["price_bucket"] < 0
 
 
-def test_content_grid_search_selects_best_reg(spark):
-    """M2 fan-out over regularization: results come back best-first by
-    recall@10 with deterministic ordering; the winning config's recall
-    clears the planted floor."""
-    from pyspark_recs.model.content import content_grid_search
-
-    data = _planted_content_data(spark)
-    results = content_grid_search(data, reg_grid=(0.0, 0.01, 10.0), k=10)
-    recs = [r["metrics"]["recall_at_10"] for r in results]
-    assert recs == sorted(recs, reverse=True)
-    assert results[0]["metrics"]["recall_at_10"] > 0.9
-    # a crushing regularization (10.0) flattens the model toward the
-    # intercept and must not win over the unregularized fits
-    assert results[0]["reg_param"] != 10.0
-
-
 def test_rs30_ensemble_bracket_flags_hold(spark):
     """End-to-end serving-stack ensemble (rs30): at sf0.001 the bracket
     row's protocol counts are positive and every quality flag holds —

@@ -96,62 +96,6 @@ def test_whole_stage_codegen_covers_relational_core(spark):
     assert re.search(r"\*\(\d+\)", plan)  # codegen stage markers
 
 
-def test_date_partitioning_prunes_time_splits(spark, tmp_path):
-    # SURVEY §7.8: the fact table partitioned by date at rest turns the
-    # P7 time-split predicates into partition pruning — excluded dates
-    # are never opened.
-    from pyspark_recs.io import load_table
-    from pyspark_recs.io.sinks import write_date_partitioned
-
-    path = str(tmp_path / "orders_by_date")
-    orders = load_table(spark, SF_DIR, "orders")
-    write_date_partitioned(orders, path, date_col="o_orderdate")
-
-    part = spark.read.parquet(path)
-    cut = "1995-01-01"
-    pruned = part.filter(F.col("p_date") < F.lit(cut))
-    plan = plan_of(pruned)
-    assert re.search(r"PartitionFilters: \[[^\]]*p_date", plan)
-    expected = orders.filter(
-        F.col("o_orderdate") < F.lit(cut).cast("timestamp")
-    ).count()
-    assert pruned.count() == expected
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    # Fact⋈fact co-located via bucketing: both sides bucketed on the
-    # join key -> sort-merge join with zero Exchange (the shuffle was
-    # paid once at write time).
-    from pyspark_recs.io import load_table
-    from pyspark_recs.io.sinks import write_bucketed
-
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    orders = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    write_bucketed(li, "t_li_b", str(tmp_path / "li"), "l_orderkey", 4)
-    write_bucketed(orders, "t_ord_b", str(tmp_path / "ord"), "o_orderkey", 4)
-    try:
-        # Force the join strategy decision away from broadcast so the
-        # bucketed sort-merge path is what gets planned (at real scale
-        # neither fact side fits the broadcast threshold anyway).
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_li_b").join(
-            spark.table("t_ord_b"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = plan_of(joined)
-        assert re.search(r"^\(\d+\) SortMergeJoin", plan, re.M)
-        assert not re.findall(r"^\(\d+\) Exchange", plan, re.M)
-        assert joined.count() == li.count()  # FK join preserves fact rows
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_ord_b")
-
-
 @pytest.mark.parametrize(
     "query", ["l03_lsh_candidate_pairs", "l14_embedding_neardup"]
 )
@@ -404,40 +348,6 @@ def test_promo_revenue_single_shuffle(spark):
     assert "BroadcastHashJoin" in plan
     shuffles = re.findall(r"^\(\d+\) Exchange", plan, re.M)
     assert len(shuffles) <= 1, plan
-
-
-def test_dynamic_partition_pruning_fires(spark, tmp_path):
-    # SURVEY §7.8 scale path: when the fact is date-partitioned and the
-    # filter arrives via a JOIN against a filtered dimension (not a
-    # literal predicate), Spark's Dynamic Partition Pruning injects a
-    # runtime subquery filter on the partition column so only matching
-    # date directories are scanned — the join-shaped sibling of static
-    # partition pruning, and the feature that makes star-schema scans
-    # over a 100 TB date-partitioned fact read days, not years.
-    from pyspark_recs.io import load_table
-    from pyspark_recs.io.sinks import write_date_partitioned
-
-    path = str(tmp_path / "orders_dpp")
-    orders = load_table(spark, SF_DIR, "orders")
-    write_date_partitioned(orders, path, date_col="o_orderdate")
-    fact = spark.read.parquet(path)
-
-    dim = (
-        orders.select(
-            F.to_date("o_orderdate").alias("p_date"),
-            F.month("o_orderdate").alias("m"),
-        )
-        .distinct()
-        .filter(F.col("m") == 1)  # selective predicate → DPP qualifies
-        .select("p_date")
-        .distinct()
-    )
-    joined = fact.join(dim, "p_date").groupBy("p_date").count()
-    plan = plan_of(joined)
-    assert re.search(r"dynamicpruning|SubqueryBroadcast", plan), plan
-    # correctness: only January partitions survive
-    expected = dim.count()
-    assert joined.count() == expected
 
 
 def test_q6_pushes_all_predicates_to_scan(spark):

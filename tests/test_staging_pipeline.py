@@ -177,7 +177,6 @@ def test_quality_checks_report_violations(spark):
     from pyspark_recs.quality import (
         DataQualityError,
         assert_schema,
-        check_references,
         schema_report,
     )
     import pytest as _pytest
@@ -200,7 +199,3 @@ def test_quality_checks_report_violations(spark):
     with _pytest.raises(DataQualityError):
         assert_schema(df, unique=["id"])
     assert_schema(df.filter(F.col("id") == 3), unique=["id"], not_null=["id"])
-
-    parent = spark.createDataFrame([(3,)], "pk int")
-    # the two id=1 rows are orphans; the NULL row is not counted
-    assert check_references(df, parent, "id", "pk") == 2

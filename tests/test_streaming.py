@@ -371,26 +371,8 @@ def test_streaming_quarantine_routes_dead_letters(spark, tmp_path_factory, tmp_p
     assert batch_dead == dead_ids
 
 
-def test_user_profile_selects_impl_by_dependency():
-    # streaming_user_profile picks transformWithStateInPandas when its
-    # protobuf dependency exists, else the applyInPandasWithState twin.
-    # This asserts the selection logic matches the environment — it
-    # never skips, in either environment.
-    from pyspark_recs.streaming.ops import _tws_available
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        assert _tws_available()
-    except ImportError:
-        assert not _tws_available()
-
-
 def test_streaming_user_profile_stateful(spark, event_dir, tmp_path):
-    # Runs whichever stateful implementation the environment supports
-    # (semantics are identical by contract; the sandbox exercises the
-    # applyInPandasWithState twin, protobuf-equipped environments the
-    # transformWithStateInPandas path).
+    # The applyInPandasWithState fold keeps each user's running profile.
     from pyspark_recs.streaming import streaming_user_profile
 
     path, schema = event_dir
@@ -539,20 +521,6 @@ def test_streaming_heavy_hitters_mg_guarantee(spark, tmp_path, tmp_path_factory)
     assert alpha_lb <= 30
 
 
-def test_streaming_debounce_matches_batch_fold(spark, event_dir, tmp_path):
-    from pyspark_recs.streaming.ops import streaming_debounce
-
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    # 1h gap: user 7 events at 00:00:05, 10:00, 00:30×2 (next day).
-    # Ordered by ts: 00:00:05 kept, 10:00 kept (9h59m later), next-day
-    # 00:30 kept (14h30m later), its dup at the same ts dropped (k-gap
-    # below threshold). user 8: single event kept.
-    out = _run_stream(streaming_debounce(stream), tmp_path, mode="append")
-    kept = {(r.user_id, r.event_id) for r in out.collect()}
-    assert kept == {(7, 1), (7, 2), (7, 4), (8, 3)}
-
-
 def test_debounce_batch_fold_hand_computed(spark):
     from pyspark_recs.workloads.streaming import s12_debounce
     import pyspark_recs.io.loaders as L
@@ -581,41 +549,6 @@ def test_debounce_batch_fold_hand_computed(spark):
     finally:
         L.load_table = orig
     assert (row.n_events, row.n_kept) == (5, 3)
-
-
-def test_idempotent_window_sink_replay_safe(spark, event_dir, tmp_path):
-    # Restarting the stream from scratch (new checkpoint, same input)
-    # must NOT duplicate rows in the sink: dynamic partition overwrite
-    # rewrites the same day-partitions idempotently.
-    from pyspark_recs.streaming.ops import streaming_idempotent_window_sink
-
-    path, schema = event_dir
-    out_dir = str(tmp_path / "sink")
-
-    def run_once(ckpt):
-        stream = read_event_stream(spark, path, schema)
-        agg, fn = streaming_idempotent_window_sink(stream, out_dir)
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(fn)
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once("ckpt1")
-    first = sorted(
-        (str(r.day), r.n_events, r.total_value)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    run_once("ckpt2")  # full replay — same partitions rewritten
-    second = sorted(
-        (str(r.day), r.n_events, r.total_value)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    assert first == second
-    assert len(first) == 2  # two distinct days in the fixture
 
 
 def test_streaming_attribution_matches_batch(spark, tmp_path_factory, tmp_path):
