@@ -723,7 +723,8 @@ def lsh_topk_deterministic(
     """Random-projection LSH top-k with DETERMINISTIC md5-derived ±1
     hyperplanes: per-table bucket equi-join, pair dedup and a bounded
     exact rescore, where every number is engine-reproducible, so the
-    whole operator is DuckDB-oracle-checkable (`lsh_topk_oracle_sql` is the twin).
+    whole operator is DuckDB-oracle-checkable (`lsh_topk_oracle_sql`
+    is the twin).
 
     Bucketing is exact integer math: the projection onto each
     hyperplane is a fixed-point ±-sum of the vector's quantized
@@ -735,10 +736,9 @@ def lsh_topk_deterministic(
     same fixed-point dot products (for unit-norm embeddings the
     ranking equals cosine).
 
-    Scale: candidate volume is bounded by the
-    bucket equi-join plus the per-query cap, never all-pairs; the
-    hyperplanes are literals compiled into the plan (no fit job, no
-    broadcast of a model).
+    Scale: candidate volume is bounded by the bucket equi-join plus the
+    per-query cap, never all-pairs; the hyperplanes are literals
+    compiled into the plan (no fit job, no broadcast of a model).
 
     ``in_dim`` MUST match the embedding dimension (the hyperplanes are
     compiled for exactly that many components). A mismatched vector is
@@ -1532,8 +1532,9 @@ def cluster_balanced_sample(
     rank is row_number + filter, which Spark executes as
     WindowGroupLimit — each task keeps ≤ cap rows per cell before the
     exchange. Defaults to deterministic lowest-id centroids
-    (oracle-checkable); pass fitted ``centroids`` in production, or ``assigned`` (an :func:`assign_cells` table, possibly session-
-    shared) to skip re-assignment.
+    (oracle-checkable); pass fitted ``centroids`` in production, or
+    ``assigned`` (an :func:`assign_cells` table, possibly
+    session-shared) to skip re-assignment.
     """
     from pyspark_recs.llmops.hashing import md5_long
 
@@ -1570,11 +1571,11 @@ def lloyd_kmeans_fixed(
     """Lloyd's k-means in FIXED-POINT arithmetic — the hash-checkable
     form of k-means (pyspark.ml's float iterations would force a
     rows-only correctness path). Vectors are quantized once to bigint
-    (``floor(x*scale + 0.5)``), every distance is an exact integer sum of squared differences, and each
-    centroid update is ``floor(sum / count)`` evaluated as an exact
-    double division of exactly-representable integers — so any engine
-    replaying the same unrolled iterations lands on the SAME centroids
-    bit-for-bit. Seeds are the ``n_cells`` lowest-id vectors
+    (``floor(x*scale + 0.5)``), every distance is an exact integer sum
+    of squared differences, and each centroid update is
+    ``floor(sum / count)`` evaluated as an exact double division of
+    exactly-representable integers — so any engine replaying the same
+    unrolled iterations lands on the SAME centroids bit-for-bit. Seeds are the ``n_cells`` lowest-id vectors
     (deterministic, the ``assign_cells`` convention); assignment ties
     break on lowest cell_id; a cell that loses all members keeps its
     previous centroid.

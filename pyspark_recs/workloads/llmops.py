@@ -1919,8 +1919,9 @@ def l44_embedding_covariance(spark: SparkSession, sf: str) -> DataFrame:
     """Exact corpus covariance matrix (upper triangle) of the embedding
     column in one distributed pass — the PCA/whitening sufficient
     statistic (llmops.similarity.embedding_covariance; its
-    eigendecomposition is a driver-sized d×d problem). Fixed-point moment sums make the d²/2 numbers
-    bit-identical across engines and partitionings."""
+    eigendecomposition is a driver-sized d×d problem). Fixed-point
+    moment sums make the d²/2 numbers bit-identical across engines and
+    partitionings."""
     emb = load_table(spark, sf, "embeddings")
     return embedding_covariance(emb, dim=64)
 
