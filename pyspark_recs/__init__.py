@@ -6,11 +6,13 @@ surveyed in SURVEY.md), re-expressed Spark-first:
 
 - relational layer  -> Spark SQL / DataFrame (``pyspark_recs.sql``)
 - ingest / sinks    -> ``pyspark_recs.io``
-- feature pipeline  -> MLlib-style estimators (``pyspark_recs.features``)
+- features          -> Categorify estimator, sequence features
+                       (``pyspark_recs.features``)
 - retrieval model   -> ALS + ranking metrics (``pyspark_recs.model``)
 - LLM-data ops      -> dedup / similarity / text / multimodal
                        (``pyspark_recs.llmops``)
-- streaming twins   -> Structured Streaming (``pyspark_recs.streaming``)
+- streaming         -> the Structured Streaming operators s18-s23 run
+                       (``pyspark_recs.streaming``)
 
 Every operator is designed for a 1000-executor / 100 TB deployment and
 tested for correctness against a DuckDB oracle on local[32].

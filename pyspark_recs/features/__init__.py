@@ -1,18 +1,1 @@
 from pyspark_recs.features.categorify import Categorify, CategorifyModel
-from pyspark_recs.features.tags import add_tags, get_tags, select_by_tag
-from pyspark_recs.features.pipeline import (
-    FeaturePipeline,
-    FeaturePipelineConfig,
-    FeaturePipelineModel,
-)
-
-__all__ = [
-    "Categorify",
-    "CategorifyModel",
-    "FeaturePipeline",
-    "FeaturePipelineConfig",
-    "FeaturePipelineModel",
-    "add_tags",
-    "get_tags",
-    "select_by_tag",
-]

@@ -1,4 +1,1 @@
-from pyspark_recs.io.loaders import load_table, load_tables
-from pyspark_recs.io.catalog import register_tables
-
-__all__ = ["load_table", "load_tables", "register_tables"]
+from pyspark_recs.io.loaders import load_table

@@ -80,12 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def spread_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin repartition IFF the plan currently yields fewer
     partitions than cores — the guard for compute-heavy projections

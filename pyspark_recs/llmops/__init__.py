@@ -30,23 +30,3 @@ from pyspark_recs.llmops.similarity import (
     ivf_topk,
     scalar_quantize,
 )
-
-__all__ = [
-    "MINHASH_COEFFS",
-    "MINHASH_PRIME",
-    "char_fingerprints",
-    "cosine_topk_bruteforce",
-    "embedding_neardup_pairs",
-    "exact_dedup_groups",
-    "hamming_neardup_pairs",
-    "ivf_topk",
-    "lsh_candidate_pairs",
-    "md5_long",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "quality_scores",
-    "scalar_quantize",
-    "simhash_fingerprints",
-    "token_stats",
-    "tokens",
-]

@@ -5,11 +5,3 @@ from pyspark_recs.model.retrieval import (
     train_als,
 )
 from pyspark_recs.model.metrics import ranking_metrics
-
-__all__ = [
-    "grid_search",
-    "ranking_metrics",
-    "recommend_topk",
-    "rerank_with_features",
-    "train_als",
-]

@@ -46,16 +46,6 @@ def latest_batch(
 # ---------------------------------------------------------------------------
 # Dedup (A2 / W1)
 # ---------------------------------------------------------------------------
-def dedup_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """GROUP BY-all-columns distinct (dedup_transactions.sql:9-14).
-
-    Scale: hash aggregate with map-side partial combine; at 100 TB prefer
-    dropDuplicates over window row_number — it needs no ordering and
-    combines before the shuffle.
-    """
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
-
-
 def dedup_last_value(
     df: DataFrame,
     group_keys: Sequence[str],
@@ -77,7 +67,7 @@ def dedup_last_value(
     Faithful to the reference's wart (SURVEY §2.5 W2): a group with 3
     distinct rows yields 3 identical output rows post-overwrite — no
     second dedup is applied here; callers wanting one-row-per-key chain
-    ``dedup_exact`` after.
+    ``dropDuplicates()`` after.
 
     Scale: one shuffle on group_keys shared by the distinct and the
     window (Catalyst reuses the partitioning when keys align).
@@ -154,31 +144,6 @@ def left_enrich(
 
 
 # ---------------------------------------------------------------------------
-# Windowed group statistics (J5 / F5)
-# ---------------------------------------------------------------------------
-def window_group_stat(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    stat: str = "avg",
-    alias: str | None = None,
-) -> DataFrame:
-    """Attach a per-group statistic to every row without a join.
-
-    Reference parity: NVTabular ``JoinGroupby(cont_cols=['price'],
-    stats=['mean'])`` (workflow_builder.py:60-69) — group stat joined back
-    onto each row.
-
-    Scale: the window form shuffles once on the keys; the groupBy+join
-    form shuffles twice. Window (no ORDER BY -> whole-partition frame) is
-    strictly better here.
-    """
-    w = Window.partitionBy(*keys)
-    fn = getattr(F, stat)
-    return df.withColumn(alias or f"{stat}_{value_col}", fn(value_col).over(w))
-
-
-# ---------------------------------------------------------------------------
 # Top-k per group (O3/W3) and global argmax (A4)
 # ---------------------------------------------------------------------------
 def top_k_per_group(
@@ -230,30 +195,6 @@ def argmax_per_group(
 # ---------------------------------------------------------------------------
 # Scalar feature transforms expressible relationally (A3 / F3 / F1)
 # ---------------------------------------------------------------------------
-def zscore(
-    df: DataFrame, value_col: str, alias: str | None = None
-) -> DataFrame:
-    """(x - mean) / stddev_samp over the whole input, as a crossjoin with
-    a 1-row broadcast stats aggregate.
-
-    Reference parity: NVTabular ``Normalize()`` (workflow_builder.py:66).
-
-    Scale: the stats aggregate is a full scan reduced to one row
-    (partial aggregation map-side), broadcast everywhere — never a window
-    over an unpartitioned frame (which would funnel 100 TB through one
-    task).
-    """
-    stats = df.agg(
-        F.avg(value_col).alias("__mu"),
-        F.stddev_samp(value_col).alias("__sigma"),
-    )
-    out = df.crossJoin(F.broadcast(stats))
-    return out.withColumn(
-        alias or f"{value_col}_z",
-        (F.col(value_col) - F.col("__mu")) / F.col("__sigma"),
-    ).drop("__mu", "__sigma")
-
-
 def bucketize_fixed_width(
     df: DataFrame, value_col: str, width: float, alias: str | None = None
 ) -> DataFrame:
@@ -569,46 +510,6 @@ def interval_join(
         )
         .drop("__bin")
     )
-
-
-def scd2_apply(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str,
-    ts_col: str = "ts",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-) -> DataFrame:
-    """SCD2 upsert without MERGE INTO (the Delta-less CDC pattern:
-    anti-join/union + window re-chaining).
-
-    ``dim`` is SCD2 history — attribute columns plus [valid_from,
-    valid_to), open rows have valid_to NULL. ``updates`` carries the
-    same attribute columns plus ``ts_col``. Closed history is immutable
-    and passes through untouched; each key's open row and its updates
-    are re-chained by time: valid_to = lead(valid_from), newest row
-    stays open.
-
-    Scale: closed rows never shuffle (filter pass-through); only open
-    rows + the update batch shuffle once on the key for the lead
-    window. Deterministic given unique (key, ts) per batch.
-    """
-    attrs = [
-        c for c in dim.columns if c not in (key, valid_from, valid_to)
-    ]
-    closed = dim.filter(F.col(valid_to).isNotNull())
-    open_rows = dim.filter(F.col(valid_to).isNull()).select(
-        key, *attrs, F.col(valid_from)
-    )
-    new_rows = updates.select(
-        key, *attrs, F.col(ts_col).alias(valid_from)
-    )
-    w = Window.partitionBy(key).orderBy(valid_from)
-    rechained = (
-        open_rows.unionByName(new_rows)
-        .withColumn(valid_to, F.lead(valid_from).over(w))
-    )
-    return closed.unionByName(rechained.select(*dim.columns))
 
 
 def scalable_prefix_sum(

@@ -1,51 +1,8 @@
 from pyspark_recs.streaming.ops import (
     read_event_stream,
-    streaming_dedup,
-    streaming_enrich,
-    streaming_attribution,
-    streaming_ewma,
-    streaming_holt,
-    streaming_heavy_hitters,
-    streaming_histogram_quantiles,
-    streaming_ordered_ewma,
-    streaming_pit_enrich,
-    streaming_drift_monitor,
-    streaming_corpus_admission,
-    streaming_hopping_agg,
-    streaming_quarantine,
-    streaming_session_agg,
-    streaming_sessionize,
-    streaming_static_anti_join,
-    streaming_stream_join,
-    streaming_funnel,
-    streaming_tumbling_agg,
-    streaming_user_profile,
-    streaming_vad,
     stream_to_kv_sink,
+    streaming_dedup,
+    streaming_hopping_agg,
+    streaming_sessionize,
+    streaming_stream_join,
 )
-
-__all__ = [
-    "read_event_stream",
-    "stream_to_kv_sink",
-    "streaming_dedup",
-    "streaming_enrich",
-    "streaming_attribution",
-    "streaming_ewma",
-    "streaming_holt",
-    "streaming_heavy_hitters",
-    "streaming_histogram_quantiles",
-    "streaming_ordered_ewma",
-    "streaming_pit_enrich",
-    "streaming_drift_monitor",
-    "streaming_corpus_admission",
-    "streaming_hopping_agg",
-    "streaming_quarantine",
-    "streaming_session_agg",
-    "streaming_sessionize",
-    "streaming_static_anti_join",
-    "streaming_stream_join",
-    "streaming_funnel",
-    "streaming_tumbling_agg",
-    "streaming_user_profile",
-    "streaming_vad",
-]

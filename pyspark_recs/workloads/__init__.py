@@ -29,5 +29,3 @@ for _mod in (_relational, _llmops, _recsys, _streaming):
 _REPO = Path(__file__).resolve().parents[2]
 QUERIES = {n: _queries[n] for n in rotation(list(_queries), _REPO)}
 ORACLE = {n: _oracle[n] for n in QUERIES if n in _oracle}
-
-__all__ = ["QUERIES", "ORACLE"]

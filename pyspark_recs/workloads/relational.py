@@ -927,9 +927,8 @@ UNPIVOT (value FOR measure IN (l_quantity, l_extendedprice))
 # --------------------------------------------------------------------- r34
 def r34_scd2_history(spark: SparkSession, sf: str) -> DataFrame:
     """SCD2 history reconstruction from a change log: each event opens a
-    validity interval closed by the key's next event (lead window —
-    the CDC read-side of sql.transforms.scd2_apply; newest row stays
-    open with valid_to NULL)."""
+    validity interval closed by the key's next event (lead window;
+    newest row stays open with valid_to NULL)."""
     ev = load_table(spark, sf, "events").select(
         "user_id", "event_type", "event_id", "value", F.col("ts")
     )

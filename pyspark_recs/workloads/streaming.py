@@ -1,9 +1,9 @@
-"""Streaming-shaped workloads (SURVEY §2.9) in their batch-equivalent
-form over ``events`` — the same logical operators the Structured
-Streaming twins in pyspark_recs.streaming run incrementally
-(tumbling-window agg, sessionization, keep-first dedup). Batch form is
-oracle-checkable; the streaming execution path is tested in tests/
-against these same results.
+"""Streaming-shaped workloads (SURVEY §2.9) over ``events``: s01-s17 in
+their batch-equivalent, oracle-checkable form, and s18-s23, which run
+the Structured Streaming operators in pyspark_recs.streaming (hopping
+agg, dedup, KV sink, sessionizer, stream-stream join) through real
+checkpoints and triggers and hash their sink's read-back against the
+batch oracle.
 """
 
 from __future__ import annotations
@@ -46,8 +46,8 @@ FROM events GROUP BY 1, 2
 def s02_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): per-user session
     count + event count. The streaming twin is
-    ``applyInPandasWithState`` / session_window; batch form = lag +
-    cumulative-flag, one shuffle on user_id."""
+    ``streaming_sessionize`` (``applyInPandasWithState``, run by s21);
+    batch form = lag + cumulative-flag, one shuffle on user_id."""
     ev = load_table(spark, sf, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -215,13 +215,12 @@ FROM islands GROUP BY user_id, sid
 
 # --------------------------------------------------------------------- s06
 def s06_stream_quarantine(spark: SparkSession, sf: str) -> DataFrame:
-    """Dead-letter table content for the streaming JSON quarantine
-    (batch-equivalent form of pyspark_recs.streaming.streaming_quarantine;
-    r42 reports the counts, this returns the routed rows themselves).
-    Corruption is planted deterministically (every 7th event loses its
-    closing brace, same as r42) so the oracle sees identical inputs;
-    the validity verdict is ``get_json_object(raw, '$') IS NULL`` —
-    exactly what the foreachBatch router evaluates per micro-batch.
+    """Dead-letter table content of a JSON quarantine (r42 reports the
+    counts, this returns the routed rows themselves). Corruption is
+    planted deterministically (every 7th event loses its closing brace,
+    same as r42) so the oracle sees identical inputs; the validity
+    verdict is ``get_json_object(raw, '$') IS NULL``, a scan-time
+    expression a foreachBatch router can evaluate per micro-batch.
 
     Scale: scan-time projection + filter (predicate pushes to the scan);
     no shuffle at all — the dead-letter write is embarrassingly
@@ -292,8 +291,7 @@ FROM x GROUP BY win_start_s
 
 # --------------------------------------------------------------------- s08
 def s08_new_user_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-vs-history anti-join (streaming twin:
-    streaming.ops.streaming_static_anti_join): events in the trailing
+    """Stream-vs-history anti-join: events in the trailing
     7 days of the dataset from users with NO earlier activity — the
     new-entity detection / dedup-against-history shape. The "seen"
     user set is the static side; per day we count the surviving events
@@ -342,14 +340,12 @@ FROM fresh GROUP BY day_s
 
 # --------------------------------------------------------------------- s09
 def s09_user_profile(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch twin of streaming.ops.streaming_user_profile (the
-    applyInPandasWithState running per-user profile): event count,
-    fixed-point total value, distinct event types — the feature-store
-    row the incremental operator maintains without rescanning history.
+    """Running per-user profile: event count, fixed-point total value,
+    distinct event types — the feature-store row an incremental
+    operator would maintain without rescanning history.
 
     Scale: one map-side-combined groupBy; value cents are integer so
-    the total is order-independent (bit-equal to the streaming state's
-    running sum)."""
+    the total is order-independent."""
     ev = load_table(spark, sf, "events")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     return ev.groupBy("user_id").agg(
@@ -372,18 +368,17 @@ FROM events GROUP BY user_id
 # --------------------------------------------------------------------- s10
 def s10_recursive_ewma(spark: SparkSession, sf: str) -> DataFrame:
     """Full-history recursive EWMA per user (r ← ½x + ½r over the
-    (ts, event_id)-ordered stream), the batch twin of
-    streaming.ops.streaming_ewma — which maintains the same value with
+    (ts, event_id)-ordered stream), a value a stateful stream holds in
     O(1) state per key. The batch form collects each user's ordered
     value array and left-folds it JVM-side (``aggregate`` over a sorted
-    array); α = ½ keeps every step binary-exact, so Spark, DuckDB's
-    ``list_reduce`` and the streaming fold agree bit for bit. Contrast
+    array); α = ½ keeps every step binary-exact, so Spark and DuckDB's
+    ``list_reduce`` agree bit for bit. Contrast
     with r58's finite 4-tap kernel: same smoothing family, windowed vs
     recursive-infinite form.
 
     Scale: one shuffle on user_id; per-key memory is the user's history
-    (the reason the streaming form exists). For unbounded histories,
-    cap with a trailing slice or switch to the stateful operator.
+    (the reason a stateful streaming form would exist). For unbounded
+    histories, cap with a trailing slice.
     """
     ev = load_table(spark, sf, "events").select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "value"
@@ -595,8 +590,7 @@ def s13_late_arrival_audit(spark: SparkSession, sf: str) -> DataFrame:
     far event time lags the maximum event time already seen —
     lateness = running_max(ts) − ts over arrival order. The lateness
     distribution tells you what `withWatermark` horizon loses which
-    fraction of events; is_late flags the 30-min horizon used by the
-    streaming twins.
+    fraction of events; is_late flags a 30-min horizon.
 
     Scale: the running max rides ``transforms.scalable_prefix_max``
     (range partition + parallel local maxes + broadcast offsets — no
@@ -650,8 +644,8 @@ def s14_utouch_attribution(spark: SparkSession, sf: str) -> DataFrame:
     Scale: both windows and the join are user-partitioned — state per
     user is one journey, never the full stream; no global window, no
     skewed key (users are the natural even partitioning of event
-    streams). The streaming twin is per-user state carrying (journey
-    touches since last purchase), the s02/s09 discipline.
+    streams). A streaming form would carry per-user state (journey
+    touches since last purchase), the s02 discipline.
     """
     ev = (
         load_table(spark, sf, "events")
@@ -751,13 +745,12 @@ JOIN purchases p ON t.user_id = p.user_id AND t.conv_id = p.conv_id
 
 # --------------------------------------------------------------------- s15
 def s15_histogram_quantiles(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming-quantile sketch, batch twin: per event type, p50/p90/
+    """Streaming-quantile sketch, batch form: per event type, p50/p90/
     p99 estimated from a FIXED 64-bin histogram of ``value`` (bin width
     8, a power of two so value/8 and the bin edges are binary-exact
-    doubles) — the constant-state quantile technique
-    ``streaming/ops.py:streaming_histogram_quantiles`` maintains
-    incrementally (t-digest/DDSketch's fixed-bucket cousin, mergeable
-    by plain vector addition). Estimates are the LOWER EDGE of the bin
+    doubles) — a constant-state quantile technique a stream can
+    maintain incrementally (t-digest/DDSketch's fixed-bucket cousin,
+    mergeable by plain vector addition). Estimates are the LOWER EDGE of the bin
     where the cumulative count first reaches ceil(q·n/100) — pure
     integer logic, engine-agreed (contrast r50, which verifies Spark's
     percentile_approx sketch against rank-exact brackets; here the
@@ -769,9 +762,8 @@ def s15_histogram_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     """
     ev = load_table(spark, sf, "events").select("event_type", "value")
     # Clamp BOTH ends: without greatest(0, ...) a negative value would
-    # land in its own negative bin here but wrap to a top bin in the
-    # streaming twin's Python list index — the clamp keeps batch and
-    # stream bit-identical for any real-world feed.
+    # land in its own negative bin; the clamp keeps every value in one
+    # of the 64 bins, the fixed-size vector the sketch promises.
     b = F.least(
         F.lit(63), F.greatest(F.lit(0), F.floor(F.col("value") / F.lit(8.0)))
     ).cast("int")
@@ -821,7 +813,7 @@ FROM cum GROUP BY event_type
 
 # --------------------------------------------------------------------- s16
 def s16_value_drift(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming drift monitor, batch twin: per event type, the
+    """Streaming drift monitor, batch form: per event type, the
     total-variation distance between the REFERENCE value distribution
     (first half of the time range) and the CURRENT one (second half),
     both reduced to s15's fixed 64-bin histogram — l59's TV metric
@@ -831,7 +823,7 @@ def s16_value_drift(spark: SparkSession, sf: str) -> DataFrame:
     |c_ref·n_cur − c_cur·n_ref| numerators, one final IEEE-double
     division to ppm. r60's KS curve is the exact-order-statistic
     sibling on orders; this is the CONSTANT-STATE form a stream can
-    maintain (`streaming/ops.py:streaming_drift_monitor`).
+    maintain.
 
     Scale: one map-side-combined groupBy to (type, half, bin) — at
     most types×2×64 rows shuffle regardless of event volume.
@@ -842,8 +834,8 @@ def s16_value_drift(spark: SparkSession, sf: str) -> DataFrame:
     bounds = ev.agg(
         F.min("ts_us").alias("lo"), F.max("ts_us").alias("hi")
     )
-    # Same two-sided clamp as s15 (see comment there): keeps the batch
-    # histogram bit-identical to the streaming twin for negative values.
+    # Same two-sided clamp as s15 (see comment there): negative values
+    # land in bin 0.
     b = F.least(
         F.lit(63), F.greatest(F.lit(0), F.floor(F.col("value") / F.lit(8.0)))
     ).cast("int")
@@ -935,12 +927,10 @@ def s17_holt_forecast(spark: SparkSession, sf: str) -> DataFrame:
     step-by-step recursive CTE there), so the doubles agree bit for
     bit — the s10 determinism argument, now with a 2-component state.
 
-    Scale: one shuffle on user_id; per-key state is O(1) in the
-    streaming form (streaming/ops.py:streaming_holt — real-table
-    parity-tested bit-exact, the s09/s10 discipline) and the batch
-    fold is one
-    JVM-side ``aggregate`` over each user's sorted history — cap with
-    a trailing slice for unbounded keys. The fold is a linear
+    Scale: one shuffle on user_id; a streaming form would hold O(1)
+    state per key, and the batch fold is one JVM-side ``aggregate``
+    over each user's sorted history — cap with a trailing slice for
+    unbounded keys. The fold is a linear
     recurrence in (level, trend), so the 100 TB alternative is the
     associative matrix-prefix scan over ``scalable_prefix_sum`` if
     per-key histories ever outgrow a task.

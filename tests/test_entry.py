@@ -1,5 +1,5 @@
 """Driver-contract tests: entry() smoke, queries()/oracle_sql()
-consistency, and a fast oracle spot-check at sf0.001.
+consistency, and every query against its DuckDB oracle at sf0.001.
 """
 
 from __future__ import annotations
@@ -29,14 +29,46 @@ def test_oracle_keys_subset_of_queries():
     assert {k for k in qs if k not in oracles} == set()
 
 
+# Queries that return at most one row at sf0.001 (r54_nation_trade
+# returns none), so the comparison below checks them only weakly at this
+# size; the sf0.01 sweep (tools/oracle_check.py) pins their values.
+THIN_AT_SMALLEST_SF = {
+    "l74_two_tower_align",
+    "r15_latest_event",
+    "r39_local_supplier_volume",
+    "r40_small_order_parts",
+    "r54_nation_trade",
+    "r69_mann_whitney",
+    "r85_forecast_revenue_change",
+    "r87_top_supplier",
+    "rs04_als_recommendations",
+    "rs20_rec_coverage",
+    "rs28_content_model_eval",
+    "rs30_ensemble_eval",
+    "rs32_joint_feature_eval",
+    "rs36_exposure_gini",
+}
+
+
 def test_every_query_runs_at_smallest_sf(spark):
-    """Every registered query must at least build+execute at sf0.001."""
-    skip_heavy = set()  # all are cheap at sf0.001
+    """Every registered query matches its DuckDB oracle twin at sf0.001:
+    row count, column names and the order-insensitive value hash, with
+    the oracle harness's HUGEINT guard (``tools.oracle_check.compare``).
+    A ``count()`` would prune the output columns and pass a query whose
+    values are wrong."""
+    from tools.oracle_check import compare, oracle_connection
+
+    con = oracle_connection(SF_DIR)
+    oracles = entry_mod.oracle_sql()
+    failed, thin = {}, set()
     for name, fn in entry_mod.queries().items():
-        if name in skip_heavy:
-            continue
-        df = fn(spark, SF_DIR)
-        assert df.count() >= 0, name
+        n_rows, problems = compare(spark, con, SF_DIR, fn, oracles[name])
+        if problems:
+            failed[name] = problems
+        if n_rows <= 1:
+            thin.add(name)
+    assert failed == {}
+    assert thin == THIN_AT_SMALLEST_SF
 
 
 def test_loader_normalizes_all_timestamps(spark):
@@ -99,29 +131,3 @@ def test_bench_headline_names_resolve_and_unique():
     missing = [n for n in bench.HEADLINE if n not in qs]
     assert missing == []
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
-
-
-def test_sql_catalog_matches_dataframe_api(spark):
-    # register_tables exposes the engine to plain spark.sql; results
-    # must match the DataFrame API bit for bit (same timestamp
-    # normalization path).
-    from pyspark.sql import functions as F
-
-    from pyspark_recs.io import load_table, register_tables
-
-    register_tables(spark, SF_DIR)
-    sql_rows = spark.sql(
-        "SELECT o_custkey, count(*) AS n FROM orders "
-        "GROUP BY o_custkey ORDER BY o_custkey"
-    ).collect()
-    df_rows = (
-        load_table(spark, SF_DIR, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("o_custkey")
-        .collect()
-    )
-    assert sql_rows == df_rows
-    # events.ts must arrive as plain TIMESTAMP through SQL too
-    t = spark.sql("SELECT unix_micros(ts) AS u FROM events LIMIT 1").collect()
-    assert isinstance(t[0].u, int)

@@ -1,21 +1,12 @@
 """Feature-layer tests: Categorify property tests (SURVEY §5.5 —
-bijectivity, OOV->0, refit stability), tags, and the composed pipeline.
+bijectivity, OOV->0, refit stability).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pyspark_recs.features import (
-    Categorify,
-    CategorifyModel,
-    add_tags,
-    select_by_tag,
-)
-from pyspark_recs.features.pipeline import (
-    FeaturePipeline,
-    FeaturePipelineConfig,
-)
+from pyspark_recs.features import Categorify, CategorifyModel
 
 
 def test_categorify_bijective_on_seen(spark):
@@ -56,47 +47,3 @@ def test_categorify_save_load_roundtrip(spark, tmp_path):
     loaded = CategorifyModel.load(spark, str(tmp_path), ["c"])
     got = {r.c: r.c_code for r in loaded.transform(df).collect()}
     assert got == {r.c: r.c_code for r in model.transform(df).collect()}
-
-
-def test_tags_survive_parquet(spark, tmp_path):
-    df = spark.createDataFrame([(1, "u")], "item_id int, user_id string")
-    tagged = add_tags(df, {"user_id": ["user"], "item_id": ["item", "item_id"]})
-    path = str(tmp_path / "tagged.parquet")
-    tagged.write.parquet(path)
-    back = spark.read.parquet(path)
-    assert select_by_tag(back, "user") == ["user_id"]
-    assert select_by_tag(back, "item_id") == ["item_id"]
-
-
-def test_feature_pipeline_end_to_end(spark):
-    df = spark.createDataFrame(
-        [
-            ("u1", 10, 5.0, 31.0, "2020-09-01"),
-            ("u2", 10, 7.0, None, "2020-10-02"),
-            ("u1", 20, 9.0, 31.0, "2020-09-03"),
-        ],
-        "customer_id string, article_id int, price double, age double, d string",
-    ).withColumn("t_dat", F.to_timestamp("d"))
-    cfg = FeaturePipelineConfig(
-        user_col="customer_id",
-        item_col="article_id",
-        event_time_col="t_dat",
-        value_col="price",
-        bucket_col="age",
-        bucket_width=5.0,
-        fill_zero_cols=("age",),
-    )
-    model = FeaturePipeline(cfg).fit(df)
-    out = model.transform(df)
-    rows = {(r.customer_id, r.article_id): r for r in out.collect()}
-    r = rows[("u1", 10)]
-    assert r.purchase_month == 9 and r.purchase_year == 2020
-    assert r.customer_id_code >= 1 and r.article_id_code >= 1
-    assert r.age_bucket == 6  # 31 // 5
-    assert rows[("u2", 10)].age_bucket == 0  # null -> 0 -> bucket 0
-    # F5: item 10 avg price = 6.0, item 20 avg = 9.0 -> z-scores symmetric
-    zs = sorted(set(round(v.avg_price_z, 6) for v in rows.values()))
-    assert len(zs) == 2 and abs(zs[0] + zs[1]) < 1e-9
-    # F6: tag-driven selection reaches the model inputs
-    assert "customer_id_code" in select_by_tag(out, "user_id")
-    assert "avg_price_z" in select_by_tag(out, "item")

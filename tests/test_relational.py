@@ -176,33 +176,6 @@ def test_interval_join_half_open_bins(spark):
     assert out == {1: "low", 2: "mid"}
 
 
-def test_scd2_apply_rechains_open_rows(spark):
-    from pyspark_recs.sql import scd2_apply
-
-    dim = spark.createDataFrame(
-        [
-            (1, "v1", 10, 20),     # closed history: immutable
-            (1, "v2", 20, None),   # open row for key 1
-            (2, "w1", 5, None),    # open row for key 2, no updates
-        ],
-        "k int, attr string, valid_from int, valid_to int",
-    )
-    updates = spark.createDataFrame(
-        [(1, "v3", 30), (1, "v4", 40)], "k int, attr string, ts int"
-    )
-    out = sorted(
-        (r.k, r.attr, r.valid_from, r.valid_to)
-        for r in scd2_apply(dim, updates, key="k").collect()
-    )
-    assert out == [
-        (1, "v1", 10, 20),     # untouched closed row
-        (1, "v2", 20, 30),     # formerly-open row closed by first update
-        (1, "v3", 30, 40),     # chained
-        (1, "v4", 40, None),   # newest stays open
-        (2, "w1", 5, None),    # unaffected key stays open
-    ]
-
-
 def test_trailing_window_range_frame(spark, tmp_path):
     """r35: RANGE frame includes same-day peers and exactly 30 days."""
     import datetime as dt

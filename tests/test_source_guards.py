@@ -142,6 +142,15 @@ def _references(node):
     return refs
 
 
+def _reexport(node):
+    """A package ``__init__``'s imports and its ``__all__`` list name what
+    the package exports; neither uses it."""
+    return isinstance(node, IMPORTS) or (
+        isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+    )
+
+
 def _operator_graph():
     """(top-level def or class -> names its body uses, root names)."""
     defs, roots = {}, set()
@@ -151,7 +160,7 @@ def _operator_graph():
             if isinstance(node, DEFS):
                 uses = _references(node) - {node.name}
                 defs[node.name] = defs.get(node.name, set()) | uses
-            elif not (package_init and isinstance(node, IMPORTS)):
+            elif not (package_init and _reexport(node)):
                 roots |= _references(node)
     for path, tree in _modules(*ROOT_DIRS):
         if "tests" not in path.relative_to(REPO).parts:

@@ -19,8 +19,6 @@ from pyspark_recs.streaming import (
     streaming_dedup,
     streaming_hopping_agg,
     streaming_sessionize,
-    streaming_static_anti_join,
-    streaming_tumbling_agg,
     stream_to_kv_sink,
 )
 
@@ -55,22 +53,6 @@ def _run_stream(stream, tmp_path, mode="complete"):
     return stream.sparkSession.sql("SELECT * FROM t_out")
 
 
-def test_streaming_tumbling_agg_matches_batch(spark, event_dir, tmp_path):
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    out = _run_stream(
-        streaming_tumbling_agg(stream, window="1 day", watermark="2 days"),
-        tmp_path,
-    )
-    got = {
-        (str(r.day), r.event_type): (r.n_events, r.total_value)
-        for r in out.collect()
-    }
-    assert got[("2024-01-01 00:00:00", "click")] == (2, 3.0)
-    assert got[("2024-01-01 00:00:00", "view")] == (1, 3.0)
-    assert got[("2024-01-02 00:00:00", "click")] == (2, 8.0)
-
-
 def test_streaming_hopping_agg_matches_batch(spark, event_dir, tmp_path):
     path, schema = event_dir
     stream = read_event_stream(spark, path, schema)
@@ -92,21 +74,6 @@ def test_streaming_hopping_agg_matches_batch(spark, event_dir, tmp_path):
     assert len(got) == 4
 
 
-def test_streaming_static_anti_join_filters_seen_keys(spark, event_dir, tmp_path):
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    seen = spark.createDataFrame([(7,)], "user_id long")
-    out = _run_stream(
-        streaming_static_anti_join(stream, seen, "user_id"),
-        tmp_path,
-        mode="append",
-    )
-    rows = out.collect()
-    # user 7's four events are filtered; only user 8's view survives
-    assert {r.user_id for r in rows} == {8}
-    assert len(rows) == 1
-
-
 def test_streaming_dedup(spark, event_dir, tmp_path):
     path, schema = event_dir
     stream = read_event_stream(spark, path, schema)
@@ -122,7 +89,9 @@ def test_streaming_dedup(spark, event_dir, tmp_path):
 def test_stream_to_kv_sink(spark, event_dir, tmp_path):
     path, schema = event_dir
     stream = read_event_stream(spark, path, schema)
-    agg = streaming_tumbling_agg(stream, window="1 day", watermark="2 days")
+    agg = streaming_hopping_agg(
+        stream, window="1 day", slide="12 hours", watermark="2 days"
+    )
 
     # put_batch runs on executors (foreachPartition inside foreachBatch),
     # so capture via the filesystem — same pattern as the batch kv_export
@@ -141,7 +110,7 @@ def test_stream_to_kv_sink(spark, event_dir, tmp_path):
 
     q = stream_to_kv_sink(
         agg.select(
-            F.col("event_type").alias("userId"),
+            F.col("win_start").cast("string").alias("userId"),
             F.col("n_events").cast("string").alias("recs"),
         ),
         put_batch,
@@ -153,8 +122,13 @@ def test_stream_to_kv_sink(spark, event_dir, tmp_path):
         for p in out_dir.glob("*.jsonl")
         for line in p.read_text().splitlines()
     ]
-    assert len(captured) >= 2  # one row per (day, type) reaching the sink
-    assert {r["userId"] for r in captured} == {"click", "view"}
+    # one row per hopping window reaching the sink, keyed by its start
+    assert {r["userId"]: r["recs"] for r in captured} == {
+        "2023-12-31 12:00:00": "3",
+        "2024-01-01 00:00:00": "3",
+        "2024-01-01 12:00:00": "2",
+        "2024-01-02 00:00:00": "2",
+    }
 
 
 def test_streaming_sessionize_stateful(spark, event_dir, tmp_path):
@@ -171,60 +145,6 @@ def test_streaming_sessionize_stateful(spark, event_dir, tmp_path):
     # (matches the batch lag+cumulative-flag form, s02_sessionize)
     assert final[7] == (3, 4)
     assert final[8] == (1, 1)
-
-
-def test_streaming_ewma_matches_batch_fold(spark, event_dir, tmp_path):
-    from pyspark_recs.streaming import streaming_ewma
-
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    out = _run_stream(streaming_ewma(stream), tmp_path, mode="update")
-    final = {}
-    for r in out.orderBy("n_events").collect():
-        final[r.user_id] = (r.n_events, r.ewma)
-    # user 7 values in ts order: 1.0, 2.0, 4.0, 4.0 (dup kept)
-    acc = 1.0
-    for x in (2.0, 4.0, 4.0):
-        acc = 0.5 * x + 0.5 * acc
-    assert final[7] == (4, acc)
-    assert final[8] == (1, 3.0)
-
-
-def test_streaming_enrich_stream_static_join(spark, event_dir, tmp_path):
-    from pyspark_recs.streaming import streaming_enrich
-
-    path, schema = event_dir
-    dim = spark.createDataFrame(
-        [(7, "gold")], "user_id long, segment string"
-    )
-    stream = read_event_stream(spark, path, schema)
-    out = _run_stream(
-        streaming_enrich(stream, dim, "user_id", defaults={"segment": "none"}),
-        tmp_path,
-        mode="append",
-    )
-    seg = {r.user_id: r.segment for r in out.collect()}
-    assert seg == {7: "gold", 8: "none"}  # unmatched user defaulted
-
-
-def test_streaming_session_window_agg(spark, event_dir, tmp_path):
-    from pyspark_recs.streaming import streaming_session_agg
-
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    out = _run_stream(
-        streaming_session_agg(stream, gap="30 minutes"), tmp_path,
-        mode="complete",
-    )
-    got = {
-        (r.user_id, str(r.session_start)): (r.n_events, r.total_value)
-        for r in out.collect()
-    }
-    # user 7: three sessions (00:00:05; 10:00; 00:30 next day with dup)
-    assert got[(7, "2024-01-01 00:00:05")] == (1, 1.0)
-    assert got[(7, "2024-01-01 10:00:00")] == (1, 2.0)
-    assert got[(7, "2024-01-02 00:30:00")] == (2, 8.0)
-    assert got[(8, "2024-01-01 11:00:00")] == (1, 3.0)
 
 
 def test_streaming_stream_stream_join(spark, event_dir, tmp_path_factory, tmp_path):
@@ -330,103 +250,6 @@ def test_streaming_stream_join_left_outer(spark, tmp_path_factory, tmp_path):
     assert got[2] is None    # no action -> outer row with NULL action
 
 
-def test_streaming_quarantine_routes_dead_letters(spark, tmp_path_factory, tmp_path):
-    """Parity with the batch s06 routing: malformed-JSON rows land in
-    the dead-letter table, parseable ones in the good table, and the
-    union reconstructs the input."""
-    from pyspark_recs.streaming import streaming_quarantine
-
-    src_dir = str(tmp_path_factory.mktemp("quarantine_src"))
-    df = spark.createDataFrame(
-        [
-            (1, '{"k": 1}'),
-            (2, '{"k": 2'),      # truncated -> dead letter
-            (3, 'not json'),     # -> dead letter
-            (4, '{"k": 4}'),
-        ],
-        "event_id long, props string",
-    )
-    df.write.parquet(src_dir, mode="overwrite")
-
-    good = str(tmp_path / "good")
-    dead = str(tmp_path / "dead")
-    stream = spark.readStream.schema(df.schema).parquet(src_dir)
-    q = streaming_quarantine(
-        stream, good, dead, checkpoint_dir=str(tmp_path / "q_ckpt")
-    )
-    q.awaitTermination(120)
-
-    good_ids = {r.event_id for r in spark.read.parquet(good).collect()}
-    dead_ids = {r.event_id for r in spark.read.parquet(dead).collect()}
-    assert good_ids == {1, 4}
-    assert dead_ids == {2, 3}
-
-    # batch-form verdict (the s06 expression) agrees row for row
-    batch_dead = {
-        r.event_id
-        for r in df.filter(
-            F.get_json_object(F.col("props"), "$").isNull()
-        ).collect()
-    }
-    assert batch_dead == dead_ids
-
-
-def test_streaming_user_profile_stateful(spark, event_dir, tmp_path):
-    # The applyInPandasWithState fold keeps each user's running profile.
-    from pyspark_recs.streaming import streaming_user_profile
-
-    path, schema = event_dir
-    stream = read_event_stream(spark, path, schema)
-    out = _run_stream(streaming_user_profile(stream), tmp_path, mode="update")
-    # update mode may emit once per micro-batch; keep the last (largest
-    # n_events) row per user — the running profile.
-    final = {}
-    for r in out.orderBy("n_events").collect():
-        final[r.user_id] = (r.n_events, r.total_value, r.n_event_types)
-    # user 7: 4 click events (incl. dup), values 1+2+4+4; one type
-    assert final[7] == (4, 11.0, 1)
-    # user 8: single view event
-    assert final[8] == (1, 3.0, 1)
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path_factory, tmp_path):
-    from pyspark_recs.features.sequences import funnel_stages
-    from pyspark_recs.streaming import streaming_funnel
-
-    rows = [
-        (1, 1, "2024-01-01 00:00:00", "view"),
-        (2, 1, "2024-01-01 00:01:00", "click"),
-        (3, 1, "2024-01-01 00:02:00", "purchase"),
-        (4, 2, "2024-01-01 00:00:00", "view"),
-        (5, 2, "2024-01-01 00:00:30", "purchase"),  # before click: no s3
-        (6, 2, "2024-01-01 00:01:00", "click"),
-        (7, 3, "2024-01-01 00:00:00", "click"),     # never views
-    ]
-    df = (
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, ts_s string, event_type string"
-        )
-        .withColumn("ts", F.to_timestamp("ts_s"))
-        .withColumn("props", F.lit("{}"))
-        .drop("ts_s")
-    )
-    src = str(tmp_path_factory.mktemp("funnel_events"))
-    df.write.parquet(src, mode="overwrite")
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = _run_stream(streaming_funnel(stream), tmp_path, mode="update")
-    deepest = {}
-    for r in out.orderBy("stage_idx").collect():
-        deepest[r.user_id] = r.stage_idx
-
-    batch = {r.stage_idx: r.n_users for r in funnel_stages(df).collect()}
-    # streaming deepest-stage counts must reproduce the batch funnel
-    for idx in (1, 2, 3):
-        n_streaming = sum(1 for s in deepest.values() if s >= idx)
-        assert n_streaming == batch[idx]
-    assert deepest == {1: 3, 2: 2, 3: 0}
-
-
 def test_streaming_restart_from_checkpoint_processes_only_new_data(
     spark, tmp_path_factory, tmp_path
 ):
@@ -494,33 +317,6 @@ def test_streaming_restart_from_checkpoint_processes_only_new_data(
     assert second[7] == (2, 3)
 
 
-def test_streaming_heavy_hitters_mg_guarantee(spark, tmp_path, tmp_path_factory):
-    """Every token whose true frequency exceeds N_bucket/(k+1) must
-    survive in its bucket's Misra-Gries summary, streamed over two
-    separate micro-batch files."""
-    from pyspark_recs.streaming import streaming_heavy_hitters
-
-    path = str(tmp_path_factory.mktemp("tokens"))
-    # heavy: 30x "alpha", 20x "beta"; tail: 40 singletons
-    rows1 = [("alpha",)] * 18 + [("beta",)] * 8 + [(f"t{i}",) for i in range(20)]
-    rows2 = [("alpha",)] * 12 + [("beta",)] * 12 + [(f"u{i}",) for i in range(20)]
-    spark.createDataFrame(rows1, "token string").write.parquet(path + "/b1")
-    spark.createDataFrame(rows2, "token string").write.parquet(path + "/b2")
-    stream = spark.readStream.schema("token string").parquet(path + "/*")
-    out = _run_stream(
-        streaming_heavy_hitters(stream, k=8, n_buckets=4), tmp_path, mode="update"
-    )
-    # latest state per (bucket, token) = the row with the max lb_count
-    final = {}
-    for r in out.orderBy("lb_count").collect():
-        final[(r.bucket, r.token)] = r.lb_count
-    survivors = {t for (_, t) in final}
-    assert "alpha" in survivors and "beta" in survivors
-    # lower-bound property: reported count never exceeds truth
-    alpha_lb = max(v for (b, t), v in final.items() if t == "alpha")
-    assert alpha_lb <= 30
-
-
 def test_debounce_batch_fold_hand_computed(spark):
     from pyspark_recs.workloads.streaming import s12_debounce
     import pyspark_recs.io.loaders as L
@@ -549,34 +345,6 @@ def test_debounce_batch_fold_hand_computed(spark):
     finally:
         L.load_table = orig
     assert (row.n_events, row.n_kept) == (5, 3)
-
-
-def test_streaming_attribution_matches_batch(spark, tmp_path_factory, tmp_path):
-    # The stateful journey operator must allocate the exact same
-    # integer-ppm credits as the batch window form (s14) over the real
-    # sf0.001 events table, streamed as one file drop.
-    from pyspark_recs.io import load_table
-    from pyspark_recs.streaming import streaming_attribution
-    from pyspark_recs.workloads.streaming import s14_utouch_attribution
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events")
-    src = str(tmp_path_factory.mktemp("attr_events"))
-    ev.write.parquet(src, mode="overwrite")
-
-    stream = read_event_stream(spark, src, ev.schema)
-    out = _run_stream(streaming_attribution(stream), tmp_path, mode="append")
-    got = {
-        (r.user_id, r.conv_event_id, r.touch_event_id, r.touch_type,
-         r.pos, r.n_touches, r.credit_ppm)
-        for r in out.collect()
-    }
-    want = {
-        (r.user_id, r.conv_event_id, r.touch_event_id, r.touch_type,
-         r.pos, r.n_touches, r.credit_ppm)
-        for r in s14_utouch_attribution(spark, sf).collect()
-    }
-    assert got == want and want
 
 
 def test_attribution_credit_conserved_per_conversion(spark):
@@ -613,319 +381,6 @@ def test_attribution_credit_conserved_per_conversion(spark):
     assert set(sums.values()) == {1_000_000}
 
 
-def test_streaming_histogram_quantiles_matches_batch_rule(
-    spark, tmp_path, tmp_path_factory
-):
-    from pyspark_recs.streaming import streaming_histogram_quantiles
-
-    # Values spread across several bins (width 8): exact bin edges.
-    vals = [1.0, 9.0, 9.5, 17.0, 25.0, 33.0, 41.0, 49.0, 57.0, 500.0]
-    path = str(tmp_path_factory.mktemp("hq"))
-    df = spark.createDataFrame(
-        [("click", v) for v in vals] + [("view", 3.0), ("view", 100.0)],
-        "event_type string, value double",
-    )
-    df.write.parquet(path, mode="overwrite")
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    out = _run_stream(
-        streaming_histogram_quantiles(stream), tmp_path, mode="update"
-    )
-    got = {
-        r.event_type: (r.n_events, r.p50_est, r.p90_est, r.p99_est)
-        for r in out.collect()
-    }
-
-    # Hand-applied batch rule: bin = min(63, floor(v/8)); estimate =
-    # 8 * first bin where cumcount >= ceil(q*n/100).
-    def expect(values):
-        bins = sorted(min(63, int(v // 8)) for v in values)
-        n = len(bins)
-
-        def est(q):
-            rank = (q * n + 99) // 100
-            return bins[rank - 1] * 8.0
-
-        return (n, est(50), est(90), est(99))
-
-    assert got["click"] == expect(vals)
-    assert got["view"] == expect([3.0, 100.0])
-
-
-def test_streaming_ordered_ewma_tolerates_out_of_order(
-    spark, tmp_path, tmp_path_factory
-):
-    """Shuffled arrival across micro-batches must produce the same fold
-    as sorted arrival: the reorder buffer + per-key frontier is what
-    the naive streaming_ewma lacks."""
-    import math
-
-    from pyspark_recs.streaming import streaming_ordered_ewma
-
-    base = str(tmp_path_factory.mktemp("ooo"))
-    schema = "event_id long, ts_s string, value double, user_id long"
-    # True (ts-sorted) order of values for user 7: 1.0, 2.0, 3.0, 4.0.
-    # Batch 1 delivers the LATER events first; batch 2 the earlier ones
-    # plus a heartbeat that advances the frontier past all real events.
-    batch1 = [(3, "2024-01-01 00:30:00", 3.0, 7), (4, "2024-01-01 00:45:00", 4.0, 7)]
-    batch2 = [
-        (1, "2024-01-01 00:00:00", 1.0, 7),
-        (2, "2024-01-01 00:15:00", 2.0, 7),
-        (99, "2024-01-01 02:00:01", 0.0, 7),  # heartbeat, stays buffered
-    ]
-    for i, rows in enumerate((batch1, batch2)):
-        df = (
-            spark.createDataFrame(rows, schema)
-            .withColumn("ts", F.to_timestamp("ts_s"))
-            .drop("ts_s")
-        )
-        df.coalesce(1).write.parquet(f"{base}/b{i}", mode="overwrite")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, value double, user_id long, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base + "/b*")
-    )
-    out = _run_stream(
-        streaming_ordered_ewma(stream, lateness_us=3_600_000_000),
-        tmp_path,
-        mode="update",
-    )
-    # Last update row per key wins (memory sink keeps all updates).
-    rows = out.collect()
-    final = max(
-        (r for r in rows if r.user_id == 7), key=lambda r: r.n_finalized
-    )
-    acc = 1.0
-    for x in (2.0, 3.0, 4.0):
-        acc = 0.5 * x + 0.5 * acc
-    assert final.n_finalized == 4
-    assert final.n_buffered == 1  # the heartbeat itself
-    assert final.ewma == acc  # bit-exact despite shuffled arrival
-
-
-def test_streaming_pit_enrich_matches_batch_asof(spark, event_dir, tmp_path):
-    """foreachBatch point-in-time enrichment must equal the batch as-of
-    join on the same data: each event sees the history version valid
-    at its own timestamp, never a future one."""
-    from pyspark_recs.sql.transforms import asof_join
-    from pyspark_recs.streaming import read_event_stream, streaming_pit_enrich
-
-    path, schema = event_dir
-    history = spark.createDataFrame(
-        [
-            (7, "2023-12-31 00:00:00", "bronze"),
-            (7, "2024-01-01 06:00:00", "gold"),   # future for event 1
-            (8, "2024-01-01 10:00:00", "silver"),
-        ],
-        "user_id long, hts_s string, tier string",
-    ).withColumn("hts", F.to_timestamp("hts_s")).drop("hts_s")
-
-    collected = []
-    process = streaming_pit_enrich(
-        history, key="user_id", event_ts="ts", history_ts="hts",
-        value_cols=["tier"], sink=lambda df, bid: collected.extend(df.collect()),
-    )
-    stream = read_event_stream(spark, path, schema)
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch = asof_join(
-        spark.read.schema(schema).parquet(path),
-        history,
-        key="user_id", left_ts="ts", right_ts="hts", value_cols=["tier"],
-    ).collect()
-    got = {(r.event_id, r.tier) for r in collected}
-    want = {(r.event_id, r.tier) for r in batch}
-    assert got == want
-    by_event = dict(got)
-    assert by_event[1] == "bronze"   # 00:00:05 — gold not yet valid
-    assert by_event[2] == "gold"     # 10:00 — after the 06:00 version
-    assert by_event[3] == "silver"   # user 8 event 11:00 — valid from 10:00
-    assert by_event[4] == "gold" and by_event[5] == "gold"
-
-
-def test_streaming_drift_monitor_matches_batch_tv(
-    spark, tmp_path, tmp_path_factory
-):
-    from pyspark_recs.streaming import streaming_drift_monitor
-
-    # Reference profile: values concentrated in bin 0; live stream
-    # shifted into bins 1-2 -> high TV. A second key stays identical
-    # to its reference -> TV 0.
-    reference = {
-        "shifted": [8, 2] + [0] * 62,
-        "stable": [0, 4, 0, 4] + [0] * 60,
-    }
-    live = [("shifted", 9.0)] * 6 + [("shifted", 17.0)] * 4 + [
-        ("stable", 9.0)
-    ] * 4 + [("stable", 25.0)] * 4
-    path = str(tmp_path_factory.mktemp("drift"))
-    df = spark.createDataFrame(live, "event_type string, value double")
-    df.write.parquet(path, mode="overwrite")
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    out = _run_stream(
-        streaming_drift_monitor(stream, reference), tmp_path, mode="update"
-    )
-    got = {r.event_type: (r.n_ref, r.n_cur, r.tv_ppm) for r in out.collect()}
-
-    def tv_ppm(ref, counts):
-        import math
-
-        n_ref, n = sum(ref), sum(counts)
-        sum_abs = sum(abs(r * n - c * n_ref) for r, c in zip(ref, counts))
-        return int(math.floor(sum_abs / (2.0 * n_ref * n) * 1e6))
-
-    cur_shift = [0, 6, 4] + [0] * 61
-    cur_stable = [0, 4, 0, 4] + [0] * 60
-    assert got["shifted"] == (10, 10, tv_ppm(reference["shifted"], cur_shift))
-    assert got["stable"] == (8, 8, 0)
-    assert got["shifted"][2] >= 800000  # the shift is detected
-
-
-def test_streaming_corpus_admission_dedups_across_batches(
-    spark, tmp_path, tmp_path_factory
-):
-    """Batch 2's near-copy of a batch-1 document must be rejected by
-    the persisted gram index; its novel document must be admitted."""
-    from pyspark_recs.streaming import streaming_corpus_admission
-
-    d1 = "the quick brown fox jumps over the lazy dog by the river"
-    d2 = "completely different content about spark shuffles and joins"
-    # near-copy of d1 (one word changed -> low novelty), plus a truly
-    # novel doc
-    d3 = d1.replace("lazy", "sleepy")
-    d4 = "yet another unrelated document describing parquet footers"
-    src = str(tmp_path_factory.mktemp("adm"))
-    schema = "doc_id long, text string"
-    spark.createDataFrame([(1, d1), (2, d2)], schema).coalesce(1).write.parquet(
-        f"{src}/b0"
-    )
-    spark.createDataFrame([(3, d3), (4, d4)], schema).coalesce(1).write.parquet(
-        f"{src}/b1"
-    )
-    index_dir = str(tmp_path / "gram_index")
-    corpus_dir = str(tmp_path / "corpus")
-    process = streaming_corpus_admission(index_dir, corpus_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    admitted = {r.doc_id for r in spark.read.parquet(corpus_dir).collect()}
-    assert admitted == {1, 2, 4}  # d3 rejected as a near-copy of d1
-
-
-def test_corpus_admission_index_stays_a_set(spark, tmp_path):
-    """Admitted docs across batches that SHARE grams must not inflate
-    the index: each gram is stored exactly once, so a later
-    partially-novel document is judged on true novelty (the old
-    append-all behavior fanned out the gate join and depressed
-    novelty_frac)."""
-    from pyspark_recs.streaming import streaming_corpus_admission
-
-    schema = "doc_id long, text string"
-    index_dir = str(tmp_path / "idx")
-    corpus_dir = str(tmp_path / "corp")
-    process = streaming_corpus_admission(index_dir, corpus_dir)
-    # batch 0: one doc
-    d1 = "alpha beta gamma delta epsilon zeta eta theta"
-    process(spark.createDataFrame([(1, d1)], schema), 0)
-    # batch 1: a doc sharing a 5-token prefix with d1 (some shared
-    # grams) but mostly novel -> must still be admitted
-    d2 = "alpha beta gamma delta epsilon omega psi chi phi upsilon tau"
-    process(spark.createDataFrame([(2, d2)], schema), 1)
-    # batch 2: another doc sharing the same prefix -> its shared grams
-    # now appear in the index from BOTH d1 and d2's admission; with a
-    # set index it is still >50% novel and admitted
-    d3 = "alpha beta gamma delta epsilon one two three four five six"
-    process(spark.createDataFrame([(3, d3)], schema), 2)
-    idx = spark.read.parquet(index_dir)
-    assert idx.count() == idx.select("gram").distinct().count()
-    admitted = {r.doc_id for r in spark.read.parquet(corpus_dir).collect()}
-    assert admitted == {1, 2, 3}
-
-
-def test_corpus_admission_releases_each_batch(spark, tmp_path):
-    """Each batch's cache and its two snapshots are released before
-    ``process`` returns: three batches leave the persisted RDDs and the
-    CacheManager exactly as they found them."""
-    from pyspark_recs.streaming import streaming_corpus_admission
-    from pyspark_recs.workloads.common import persisted_ids, unpersist_shared
-
-    schema = "doc_id long, text string"
-    process = streaming_corpus_admission(
-        str(tmp_path / "idx"), str(tmp_path / "corp")
-    )
-    batches = [
-        spark.createDataFrame([(i, text)], schema)
-        for i, text in enumerate(
-            [
-                "the quick brown fox jumps over the lazy dog",
-                "completely different content about spark shuffles",
-                "yet another unrelated document describing parquet footers",
-            ]
-        )
-    ]
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    unpersist_shared(spark)
-    assert cache_manager.isEmpty()
-    before = persisted_ids(spark)
-    for batch_id, batch in enumerate(batches):
-        process(batch, batch_id)
-    assert persisted_ids(spark) == before
-    assert cache_manager.isEmpty()
-    corpus = spark.read.parquet(str(tmp_path / "corp"))
-    assert {r.doc_id for r in corpus.collect()} == {0, 1, 2}
-
-
-def test_corpus_admission_replay_is_idempotent(spark, tmp_path):
-    """A foreachBatch retry (same batch_id) must leave the corpus and
-    index exactly as the first attempt did — the batch's documents are
-    NOT re-gated against their own grams and dropped."""
-    from pyspark_recs.streaming import streaming_corpus_admission
-
-    schema = "doc_id long, text string"
-    index_dir = str(tmp_path / "idx")
-    corpus_dir = str(tmp_path / "corp")
-    process = streaming_corpus_admission(index_dir, corpus_dir)
-    b0 = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")], schema
-    )
-    b1 = spark.createDataFrame(
-        [(2, "completely different content about spark shuffles")], schema
-    )
-    process(b0, 0)
-    process(b1, 1)
-    before_corpus = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(corpus_dir).collect()
-    )
-    before_idx = sorted(r.gram for r in spark.read.parquet(index_dir).collect())
-    # simulate the retry of batch 1 after a mid-batch failure
-    process(b1, 1)
-    after_corpus = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(corpus_dir).collect()
-    )
-    after_idx = sorted(r.gram for r in spark.read.parquet(index_dir).collect())
-    assert after_corpus == before_corpus == [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "completely different content about spark shuffles"),
-    ]
-    assert after_idx == before_idx
-
-
 def test_progress_listener_records_batches(spark, event_dir, tmp_path):
     import json as _json
     import time as _time
@@ -938,7 +393,9 @@ def test_progress_listener_records_batches(spark, event_dir, tmp_path):
     try:
         stream = read_event_stream(spark, path, schema)
         out = _run_stream(
-            streaming_tumbling_agg(stream, window="1 day", watermark="2 days"),
+            streaming_hopping_agg(
+                stream, window="1 day", slide="12 hours", watermark="2 days"
+            ),
             tmp_path,
         )
         assert out.count() > 0
@@ -959,36 +416,6 @@ def test_progress_listener_records_batches(spark, event_dir, tmp_path):
         assert all("batch_id" in r and "duration_ms" in r for r in rows)
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_streaming_ewma_parity_on_real_events_table(spark, tmp_path):
-    """Streaming-vs-batch parity on the REAL driver testdata (not a
-    hand-made fixture): the stateful fold over sf0.001's ~1k events
-    must reproduce s10's batch array-fold bit for bit for every user."""
-    from pyspark_recs.io import load_table
-    from pyspark_recs.streaming import streaming_ewma
-    from pyspark_recs.workloads.streaming import s10_recursive_ewma
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_src")
-    # materialize through load_table so the stream source sees plain
-    # TIMESTAMP (the raw parquet may be nanos/NTZ)
-    ev = load_table(spark, sf, "events").select(
-        "event_id", "ts", "event_type", "value", "user_id"
-    )
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = _run_stream(streaming_ewma(stream), tmp_path, mode="update")
-    streamed = {}
-    for r in out.collect():  # keep the row with the max n_events per user
-        cur = streamed.get(r.user_id)
-        if cur is None or r.n_events > cur[0]:
-            streamed[r.user_id] = (r.n_events, r.ewma)
-    batch = {
-        r.user_id: (r.n_events, r.ewma)
-        for r in s10_recursive_ewma(spark, sf).collect()
-    }
-    assert streamed == batch  # bit-exact, every user
 
 
 def test_streaming_sessionize_parity_on_real_events_table(spark, tmp_path):
@@ -1013,139 +440,6 @@ def test_streaming_sessionize_parity_on_real_events_table(spark, tmp_path):
         for r in s02_sessionize(spark, sf).collect()
     }
     assert streamed == batch
-
-
-def test_streaming_quantiles_parity_on_real_events_table(spark, tmp_path):
-    from pyspark_recs.io import load_table
-    from pyspark_recs.streaming import streaming_histogram_quantiles
-    from pyspark_recs.workloads.streaming import s15_histogram_quantiles
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_src3")
-    ev = load_table(spark, sf, "events").select("event_type", "value")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = _run_stream(
-        streaming_histogram_quantiles(stream), tmp_path, mode="update"
-    )
-    streamed = {}
-    for r in out.collect():
-        cur = streamed.get(r.event_type)
-        if cur is None or r.n_events > cur[0]:
-            streamed[r.event_type] = (r.n_events, r.p50_est, r.p90_est, r.p99_est)
-    batch = {
-        r.event_type: (r.n_events, r.p50_est, r.p90_est, r.p99_est)
-        for r in s15_histogram_quantiles(spark, sf).collect()
-    }
-    assert streamed == batch
-
-
-def test_histogram_negative_values_clamp_batch_stream_identical(
-    spark, tmp_path, tmp_path_factory
-):
-    """Negative values must land in bin 0 on BOTH sides (the streaming
-    side's unclamped floor once produced a negative Python list index
-    that silently wrapped to a top bin — the clamp keeps batch and
-    stream bit-identical on any real feed)."""
-    from pyspark.sql import Window
-
-    from pyspark_recs.streaming import streaming_histogram_quantiles
-
-    vals = [-50.0, -8.0, -0.5, 1.0, 9.0, 17.0, 600.0]
-    path = str(tmp_path_factory.mktemp("hqneg"))
-    df = spark.createDataFrame(
-        [("click", v) for v in vals], "event_type string, value double"
-    )
-    df.write.parquet(path, mode="overwrite")
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    out = _run_stream(
-        streaming_histogram_quantiles(stream), tmp_path, mode="update"
-    )
-    got = {
-        r.event_type: (r.n_events, r.p50_est, r.p90_est, r.p99_est)
-        for r in out.collect()
-    }
-    # batch twin rule, clamped both ends (s15's expression)
-    b = F.least(
-        F.lit(63), F.greatest(F.lit(0), F.floor(F.col("value") / F.lit(8.0)))
-    ).cast("int")
-    hist = df.groupBy("event_type", b.alias("bin")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    wc = Window.partitionBy("event_type").orderBy("bin")
-    wt = Window.partitionBy("event_type")
-    cum = hist.withColumn("cum", F.sum("cnt").over(wc)).withColumn(
-        "n", F.sum("cnt").over(wt)
-    )
-
-    def est(q):
-        hit = F.col("cum") >= F.expr(f"({q}L * n + 99) div 100")
-        return F.min(F.when(hit, F.col("bin"))) * F.lit(8.0)
-
-    batch = {
-        r.event_type: (r.n, r.p50, r.p90, r.p99)
-        for r in cum.groupBy("event_type")
-        .agg(
-            F.max("n").alias("n"),
-            est(50).alias("p50"),
-            est(90).alias("p90"),
-            est(99).alias("p99"),
-        )
-        .collect()
-    }
-    assert got == batch
-    # the three negatives clamp into bin 0 → p50 of 7 values = bin 0
-    assert got["click"][1] == 0.0
-
-
-def test_streaming_drift_monitor_parity_on_real_events_table(
-    spark, tmp_path
-):
-    """Real-table parity for the drift monitor: freeze the FIRST time
-    half of sf0.001's events as the reference histograms, stream the
-    SECOND half, and the final per-type total-variation ppm must equal
-    s16's batch computation bit for bit (same clamped bins, same
-    cross-multiplied integer numerators)."""
-    import math
-
-    from pyspark_recs.io import load_table
-    from pyspark_recs.streaming import streaming_drift_monitor
-    from pyspark_recs.workloads.streaming import s16_value_drift
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events").select(
-        "event_type", "value", F.unix_micros("ts").alias("ts_us")
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-    # reference: first-half histograms with the two-sided clamp
-    ref_rows = (
-        ev.filter(F.col("ts_us") * 2 < lo + hi)
-        .select("event_type", "value")
-        .collect()
-    )
-    reference = {}
-    for r in ref_rows:
-        counts = reference.setdefault(r.event_type, [0] * 64)
-        counts[min(63, max(0, int(math.floor(r.value / 8.0))))] += 1
-    cur = ev.filter(F.col("ts_us") * 2 >= lo + hi).select(
-        "event_type", "value"
-    )
-    src = str(tmp_path / "events_cur")
-    cur.write.parquet(src)
-    stream = spark.readStream.schema(cur.schema).parquet(src)
-    out = _run_stream(
-        streaming_drift_monitor(stream, reference), tmp_path, mode="update"
-    )
-    streamed = {}
-    for r in out.collect():
-        prev = streamed.get(r.event_type)
-        if prev is None or r.n_cur > prev[1]:
-            streamed[r.event_type] = (r.n_ref, r.n_cur, r.tv_ppm)
-    batch = {
-        r.event_type: (r.n_ref, r.n_cur, r.tv_ppm)
-        for r in s16_value_drift(spark, sf).collect()
-    }
-    assert streamed == batch  # bit-exact, every event type
 
 
 def test_stateful_midstream_crash_same_checkpoint_exactly_once(
@@ -1239,60 +533,6 @@ def test_stateful_midstream_crash_same_checkpoint_exactly_once(
     assert emitted[8] == (2, 2)
 
 
-def test_streaming_vad_parity_on_real_wav_windows(spark, tmp_path):
-    """Streaming-vs-batch parity for the energy-gate VAD: the stateful
-    run-length fold over sf0.001's decoded WAV window energies must
-    reproduce vad_segments' gaps-and-islands output exactly for every
-    doc (integer arithmetic end-to-end)."""
-    import pandas as pd
-
-    from pyspark_recs.io import load_table
-    from pyspark_recs.llmops.multimodal import (
-        audio_window_energies,
-        vad_segments,
-    )
-    from pyspark_recs.llmops.wav import encode_wav, synth_pcm
-    from pyspark_recs.streaming import streaming_vad
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select("doc_id").limit(64)
-
-    def make_payloads(batches):
-        for pdf in batches:
-            payloads = [
-                encode_wav(8000, 1, synth_pcm(int(d))) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    payloads = docs.mapInPandas(
-        make_payloads, schema="doc_id bigint, payload binary"
-    )
-    windows = audio_window_energies(payloads, window=32)
-    src = str(tmp_path / "vad_windows")
-    windows.write.parquet(src)
-
-    batch = {
-        r.doc_id: (r.n_windows, r.n_active, r.n_segments, r.longest_run,
-                   r.active_abs_sum)
-        for r in vad_segments(
-            spark.read.parquet(src), threshold=32000
-        ).collect()
-    }
-    stream = spark.readStream.schema(windows.schema).parquet(src)
-    out = _run_stream(
-        streaming_vad(stream, threshold=32000), tmp_path, mode="update"
-    )
-    streamed = {}
-    for r in out.collect():  # keep the most-complete row per doc
-        cur = streamed.get(r.doc_id)
-        if cur is None or r.n_windows > cur[0]:
-            streamed[r.doc_id] = (r.n_windows, r.n_active, r.n_segments,
-                                  r.longest_run, r.active_abs_sum)
-    assert streamed == batch  # exact, every doc
-
-
 def test_holt_forecast_hand_computed(spark, tmp_path):
     """s17 Holt recurrence on a 3-step sequence, checked against the
     by-hand halvings (every intermediate is a dyadic rational, so the
@@ -1320,34 +560,6 @@ def test_holt_forecast_hand_computed(spark, tmp_path):
     assert (got[7].level, got[7].trend, got[7].forecast1) == (4.5, -0.25, 4.25)
     assert got[7].n_events == 3
     assert (got[9].level, got[9].trend, got[9].forecast1) == (5.0, 0.0, 5.0)
-
-
-def test_streaming_holt_parity_on_real_events_table(spark, tmp_path):
-    """Streaming-vs-batch parity for the Holt fold on the REAL driver
-    testdata: the O(1)-state (level, trend) recurrence must reproduce
-    s17's batch array-fold bit for bit for every user."""
-    from pyspark_recs.io import load_table
-    from pyspark_recs.streaming import streaming_holt
-    from pyspark_recs.workloads.streaming import s17_holt_forecast
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_src_holt")
-    ev = load_table(spark, sf, "events").select(
-        "event_id", "ts", "event_type", "value", "user_id"
-    )
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = _run_stream(streaming_holt(stream), tmp_path, mode="update")
-    streamed = {}
-    for r in out.collect():  # keep the row with the max n_events per user
-        cur = streamed.get(r.user_id)
-        if cur is None or r.n_events > cur[0]:
-            streamed[r.user_id] = (r.n_events, r.level, r.trend, r.forecast1)
-    batch = {
-        r.user_id: (r.n_events, r.level, r.trend, r.forecast1)
-        for r in s17_holt_forecast(spark, sf).collect()
-    }
-    assert streamed == batch  # bit-exact, every user
 
 
 def test_stream_stream_join_boundaries_planted(spark, tmp_path):
@@ -1400,14 +612,8 @@ def test_stateful_folds_survive_multi_chunk_groups(spark, tmp_path):
     sorting per chunk folded chunks in arrival order (caught by s21's
     checksum mismatch between shuffle-partition settings at 10 M rows).
     Force tiny Arrow chunks + shuffled multi-partition input and demand
-    the sessionizer and EWMA still match the in-order batch fold."""
+    the sessionizer still matches the in-order batch fold."""
     import random
-
-    from pyspark_recs.streaming import (
-        read_event_stream,
-        streaming_ewma,
-        streaming_sessionize,
-    )
 
     rows = [(1, i, 1_700_000_000_000_000 + i * 10_000_000, float(i % 7))
             for i in range(200)]  # 10 s apart -> gaps < 30 min: 1 session
@@ -1443,17 +649,6 @@ def test_stateful_folds_survive_multi_chunk_groups(spark, tmp_path):
             ).collect()
         }
         assert got == {1: (2, 201)}
-        # EWMA: exact half-decay fold must equal the in-order python fold
-        expect = None
-        for _, _, _, v in sorted(rows, key=lambda r: (r[2], r[1])):
-            expect = v if expect is None else 0.5 * v + 0.5 * expect
-        ew = {
-            r.user_id: (r.n_events, r.ewma)
-            for r in _run_stream(
-                streaming_ewma(stream), tmp_path / "e", mode="update"
-            ).collect()
-        }
-        assert ew == {1: (201, expect)}
     finally:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", old

@@ -22,14 +22,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.oracle_check import canon_rows, value_hash  # noqa: E402
+from tools.oracle_check import compare, oracle_connection  # noqa: E402
 
 
 def main() -> int:
     n_prefix = int(sys.argv[1]) if len(sys.argv) > 1 else 55
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -45,15 +44,7 @@ def main() -> int:
 
     import __spark_entry__ as e
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
+    con = oracle_connection(sf)
 
     qs, oracles = e.queries(), e.oracle_sql()
     names = list(qs)[:n_prefix]
@@ -61,27 +52,12 @@ def main() -> int:
     t_total = time.time()
     for name in names:
         t0 = time.time()
-        try:
-            sdf = qs[name](spark, sf)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = list(sdf.columns)
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-            sc, sl = canon_rows(scols, srows)
-            dc, dl = canon_rows(dcols, drows)
-            ok = (
-                len(srows) == len(drows)
-                and sc == dc
-                and value_hash(sl) == value_hash(dl)
-            )
-        except Exception as ex:
-            ok = False
-            print(f"ERR {name}: {str(ex)[:160]}", flush=True)
-        if not ok:
+        _, problems = compare(spark, con, sf, qs[name], oracles[name])
+        if problems:
             n_fail += 1
+            print(f"ERR {name}: {'; '.join(problems)[:160]}", flush=True)
         print(
-            f"{'PASS' if ok else 'FAIL'} {name} "
+            f"{'FAIL' if problems else 'PASS'} {name} "
             f"({time.time() - t0:.1f}s)",
             flush=True,
         )
